@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *    self-consistent universe joining to the same fixed region/nation dims
   *    (which don't scale in TPC-H either);
   *  - document copies salt every 5th token with a copy-unique token (the
-  *    ScaleProbe §6.1 scheme) and recompute n_chars, so no copy is a
-  *    near-duplicate of its original under token/shingle/length metrics;
+  *    SURVEY.md §6.1 scheme behind BENCH_sf1_probe*.json) and recompute
+  *    n_chars, so no copy is a near-duplicate of its original under token/shingle/length metrics;
   *  - embedding copies circularly rotate the vector by `copy` positions —
   *    norm-preserving, decorrelates copies, no new near-dup pairs.
   *

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.sql.{Date, DriverManager}
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Layout, Merge, Prepare, Validate}
@@ -73,8 +71,8 @@ object JdbcReplace {
   *    its own partitions. Idempotent reruns subsume the reference's
   *    per-file transaction rollback (tasks/load.py:33-55).
   *  - the `visitantes` upsert (J1) rewrites via full-outer join into a NEW
-  *    versioned directory and a pointer-file swap makes it current — readers
-  *    never observe a half-written table.
+  *    version directory and an atomic pointer swap ([[VersionedDir]]) makes
+  *    it current — readers never observe a half-written table.
   *  - `bitacora` is appended LAST: it is the ledger consumers audit
   *    (README.md:166-174), so a file appears there only after its data
   *    committed.
@@ -186,7 +184,7 @@ object Pipeline {
     * `visitantes_staging`, then swap it in with RENAMEs so readers never see
     * a half-written table (RENAME TABLE is metadata-only in Derby and MySQL
     * alike). On entry, repair any crash between the two renames of a prior
-    * run (same roll-forward/roll-back ladder as PostProcess.compactParquet).
+    * run (same roll-forward/roll-back ladder as VersionedDir.recoverAside).
     */
   private def jdbcReplaceVisitantes(df: DataFrame, m: SinkMode.Jdbc): Unit = {
     if (!jdbcTableExists(m, "visitantes") && jdbcTableExists(m, "visitantes_old"))
@@ -299,10 +297,19 @@ object Pipeline {
       else spark.read.jdbc(m.url, "bitacora", jdbcProps(m))
         .select("nombreArchivo").distinct().collect().map(_.getString(0)).toSet
     case SinkMode.Parquet =>
-      val bitDir = Paths.get(outDir, "bitacora")
-      if (!Files.exists(bitDir)) Set.empty
-      else spark.read.parquet(bitDir.toString)
+      val bitDir = s"$outDir/bitacora"
+      if (!exists(spark, bitDir)) Set.empty
+      else spark.read.parquet(bitDir)
         .select("nombreArchivo").distinct().collect().map(_.getString(0)).toSet
+  }
+
+  /** Existence on the path's own Hadoop FileSystem: `outDir` may be any
+    * Hadoop URI (`file:`, `hdfs:`), which a local-path API would resolve as a
+    * cwd-relative name.
+    */
+  private[graft] def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** P16 for real files: the schema-enforced CSV read can never fail the
@@ -397,10 +404,11 @@ object Pipeline {
                            partial: Boolean = false): RetryDecision = {
     import spark.implicits._
     require(horizonDays >= 1, s"horizonDays must be >= 1, got $horizonDays")
-    val dir = Paths.get(outDir, "reintentos")
+    val dir = s"$outDir/reintentos"
+    val dirExists = exists(spark, dir)
     val prior: Map[String, (Date, Date, Int, String)] =
-      if (!Files.exists(dir)) Map.empty
-      else spark.read.parquet(dir.toString)
+      if (!dirExists) Map.empty
+      else spark.read.parquet(dir)
         .select("nombreArchivo", "fechaPrimerFallo", "fechaUltimoFallo",
           "intentos", "motivo")
         .collect()
@@ -435,7 +443,7 @@ object Pipeline {
         (f, first, last, n, motivo)
       }.toSeq
     val rows = merged ++ preserved
-    if (rows.nonEmpty || Files.exists(dir))
+    if (rows.nonEmpty || dirExists)
       // EXPIRED rows stay in this rewrite: the caller quarantines them
       // AFTER this returns, and a crash in between must leave the
       // first-failure date on disk — dropping the row first would restart
@@ -445,9 +453,13 @@ object Pipeline {
       // processed and live in bitacora now).
       rows.toDF("nombreArchivo", "fechaPrimerFallo", "fechaUltimoFallo",
           "intentos", "motivo")
-        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+        .coalesce(1).write.mode("overwrite").parquet(dir)
     RetryDecision(retry.map(_._1), expired.map(_._1))
   }
+
+  /** The parquet visitantes versions: `v%06d` dirs under `outDir/visitantes`. */
+  private def visitantesVersions(spark: SparkSession, outDir: String): VersionedDir =
+    new VersionedDir(s"$outDir/visitantes", "v%06d", spark.sparkContext.hadoopConfiguration)
 
   /** Resolve the current visitantes table version, if any. */
   def currentVisitantes(spark: SparkSession, outDir: String,
@@ -457,53 +469,15 @@ object Pipeline {
         Some(spark.read.jdbc(m.url, "visitantes", jdbcProps(m)))
       else None
     case SinkMode.Parquet =>
-      val ptr = Paths.get(outDir, "visitantes", "_CURRENT")
-      if (Files.exists(ptr))
-        Some(spark.read.parquet(Paths.get(outDir, "visitantes", Files.readString(ptr).trim).toString))
-      else None
-  }
-
-  /** Keep-last-N retention for parquet visitantes versions — the reference
-    * has explicit retention policies (README.md:139-143) and without one the
-    * pointer-swap design grows a `v%06d` directory per batch forever. Runs
-    * AFTER the pointer swap (crash-safe order: a crash mid-prune leaves only
-    * stale extra versions, re-pruned on the next batch) and never deletes
-    * the version `_CURRENT` names, whatever `keep` says.
-    *
-    * Concurrency contract: single writer, short readers. An EXTERNAL reader
-    * holding a DataFrame from a `currentVisitantes` call made K batches ago
-    * may still lazily scan a version this prune deletes and hit
-    * FileNotFoundException — keep-last-N (default 3) is the grace window, so
-    * a reader must consume its frame within N-1 subsequent batches. The
-    * in-batch path is safe unconditionally: `merged` is fully written before
-    * the swap, and the prune only touches superseded versions.
-    */
-  private[graft] def pruneVisitantesVersions(outDir: String, keep: Int): Unit = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    val vdir = Paths.get(outDir, "visitantes")
-    if (!Files.isDirectory(vdir)) return
-    val ptr = vdir.resolve("_CURRENT")
-    val current = if (Files.exists(ptr)) Files.readString(ptr).trim else ""
-    val s = Files.list(vdir)
-    val versions =
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.matches("v\\d{6}")).toSeq
-        .sortBy(_.getFileName.toString)
-      finally s.close()
-    versions.dropRight(keep)
-      .filterNot(_.getFileName.toString == current)
-      .foreach { p =>
-        val w = Files.walk(p)
-        try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally w.close()
-      }
+      val versions = visitantesVersions(spark, outDir)
+      versions.current.map(v => spark.read.parquet(versions.path(v)))
   }
 
   /** Full batch run. Returns per-run totals (the driver-visible contract the
     * reference exposes through bitacora).
     */
   def runBatch(spark: SparkSession, inputDir: String, outDir: String, asOf: Date,
-               sink: SinkMode = SinkMode.Parquet, keepVersions: Int = 3,
+               sink: SinkMode = SinkMode.Parquet,
                retryHorizonDays: Int = 2): RunSummary = {
     def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
     val done = processedFiles(spark, outDir, sink)
@@ -536,9 +510,7 @@ object Pipeline {
       .schema(Layout.rawSchema)
       .csv(todo: _*)
       .withColumn("nombreArchivo", element_at(split(input_file_name(), "/"), -1))
-    val s = processBatch(spark, raw, outDir, asOf,
-      expectedFiles = todo.map(base),
-      sink = sink, keepVersions = keepVersions)
+    val s = processBatch(spark, raw, outDir, asOf, expectedFiles = todo.map(base), sink = sink)
     s.copy(files = s.files + toQuarantine.size)
   }
 
@@ -555,7 +527,7 @@ object Pipeline {
     */
   def processBatch(spark: SparkSession, raw: DataFrame, outDir: String, asOf: Date,
                    expectedFiles: Seq[String] = Seq.empty,
-                   sink: SinkMode = SinkMode.Parquet, keepVersions: Int = 3): RunSummary = {
+                   sink: SinkMode = SinkMode.Parquet): RunSummary = {
     // P16: missing columns are a hard failure; extra columns flow through.
     val layout = Validate.checkLayout(raw.drop("nombreArchivo"))
     require(layout.ok, s"layout check failed, missing columns: ${layout.missing.mkString(", ")}")
@@ -605,7 +577,7 @@ object Pipeline {
     }
 
     // visitantes: A1 delta + J1 merge, then the mode's replace protocol —
-    // versioned dir + pointer swap (+ keep-last-N GC) on parquet, staging
+    // a new version published behind the atomic pointer on parquet, staging
     // table + RENAME swap on JDBC.
     val delta = Prepare.visitantes(prepared)
     val merged = currentVisitantes(spark, outDir, sink)
@@ -618,24 +590,21 @@ object Pipeline {
         case JdbcReplace.Upsert => jdbcUpsertVisitantes(merged, m)
       }
       case SinkMode.Parquet =>
-        val ptr = Paths.get(outDir, "visitantes", "_CURRENT")
-        val nextVersion = f"v${(if (Files.exists(ptr)) Files.readString(ptr).trim.drop(1).toInt else 0) + 1}%06d"
-        val versionDir = Paths.get(outDir, "visitantes", nextVersion).toString
+        val versions = visitantesVersions(spark, outDir)
+        val next = versions.current.fold(1L)(_ + 1)
+        val versionDir = versions.path(next)
         merged.write.mode("overwrite").parquet(versionDir)
-        Files.createDirectories(ptr.getParent)
-        Files.writeString(ptr, nextVersion)
-        pruneVisitantesVersions(outDir, keepVersions)
+        versions.publish(next)
         // SCD-2 history of the visitantes dimension (SURVEY §2.5 rollover
         // semantics, kept queryable by time): this batch's updates are the
         // merged states of the keys the batch touched, effective asOf. The
         // closed extent under visitantes_scd/closed only ever appends —
         // existing files stay byte-untouched (the Scd.applyBatchDelta write
         // path at Pipeline level; cold history never rewrites). Rebased on
-        // the JUST-WRITTEN version dir, not `merged`: the lazy merge plan
-        // reads the PREVIOUS version, which the GC above may already have
-        // pruned. JDBC mode keeps the reference's Type-1 table only: an
-        // operational DB's dimension history is the warehouse's job, not
-        // the OLTP sink's. This hook sits INSIDE the documented
+        // the JUST-WRITTEN version dir, not `merged`, whose lazy plan would
+        // re-run the merge. JDBC mode keeps the reference's Type-1 table
+        // only: an operational DB's dimension history is the warehouse's
+        // job, not the OLTP sink's. This hook sits INSIDE the documented
         // pointer-swap-to-ledger-append crash window (README "Rerun
         // idempotence"): the SCD history inherits the ledger-gate rerun
         // contract — a rerun after a crash here re-merges the delta and the
@@ -646,8 +615,7 @@ object Pipeline {
           .join(delta.select("email"), Seq("email"), "left_semi")
           .withColumn("_eff", lit(asOf))
         operators.Scd.applyBatchDeltaDirs(spark,
-          Paths.get(outDir, "visitantes_scd", "open").toString,
-          Paths.get(outDir, "visitantes_scd", "closed").toString,
+          s"$outDir/visitantes_scd/open", s"$outDir/visitantes_scd/closed",
           touched, "email", Merge.allCols.filterNot(_ == "email"), "_eff")
     }
 

@@ -300,7 +300,8 @@ object Dedup {
     * multi-batch drain can hold the index as localCheckpointed blocks
     * ([[DedupIndexCache]]) instead of re-reading and re-decoding the parquet
     * index once per micro-batch — the dominant cost of the 2.12× bounded-
-    * drain overhead ScaleProbe r19s measured (round-19 verdict item 6).
+    * drain overhead the round-19 ×10 drain measured (SURVEY.md, with
+    * BENCH_sf1_probe_r19.json; round-19 verdict item 6).
     */
   def incrementalSurvivorsFrames(cSets0: DataFrame, cBands: DataFrame, cFps: DataFrame,
                                  delta: DataFrame, idCol: String,
@@ -413,21 +414,19 @@ object Dedup {
     Seq("sets", "bands", "fps")
       .map(sub => sub -> compactDistinctDir(spark, dir, sub, numFiles)).toMap
 
-  /** One sub-index distinct-rewrite with the rename-aside swap + entry-time
-    * crash recovery ladder (PostProcess.compactParquet's protocol): shared
-    * by [[compactDedupIndex]] and
-    * [[graft.operators.Similarity.compactSemanticIndex]]. Single-writer;
+  /** One sub-index distinct-rewrite through [[graft.VersionedDir]]'s
+    * rename-aside swap + entry-time crash recovery, shared by
+    * [[compactDedupIndex]], [[graft.operators.Similarity.compactSemanticIndex]]
+    * and [[graft.operators.Multimodal.compactMediaIndex]]. Single-writer;
     * the dir stays readable at every crash point. Returns (rows before,
     * rows after).
-    */
-  /** `readPath` maps the live sub-dir to what spark.read should open (the
+    *
+    * `readPath` maps the live sub-dir to what spark.read should open (the
     * media index appends a trailing glob star so base + batch subdirs are
     * read as a union); `writeSub` nests the rewritten parquet inside the
     * swap target (the media index folds everything into `base/` so the
     * post-swap glob still matches). Defaults are the flat dedup/semantic
-    * layout. ONE copy of the swap/recovery ladder serves all three indexes
-    * (round-18 review finding: a drifting second copy of a crash protocol
-    * is its own bug).
+    * layout.
     */
   private[operators] def compactDistinctDir(spark: org.apache.spark.sql.SparkSession,
                                             dir: String, sub: String,
@@ -436,34 +435,17 @@ object Dedup {
                                             writeSub: String = ""): (Long, Long) = {
     import org.apache.hadoop.fs.Path
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    // Hadoop FileSystem API (not java.nio) so an index on HDFS/S3A works for
-    // compaction the same way it does for build/gate/append. Every rename
-    // here targets a non-existent destination (the ladder deletes first), so
-    // checked FileSystem.rename is sufficient — no overwrite semantics needed.
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mv(src: Path, dst: Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"compactDistinctDir: rename $src -> $dst failed")
     val d = new Path(base, sub)
-    val tmp = new Path(base, s"$sub.compact.tmp")
-    val old = new Path(base, s"$sub.compact.old")
-    // entry-time recovery, same ladder as PostProcess.compactParquet
-    if (!fs.exists(d)) {
-      if (fs.exists(tmp)) mv(tmp, d)
-      else if (fs.exists(old)) mv(old, d)
-    }
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    val tmp = graft.VersionedDir.recoverAside(fs, d)
     val cur = spark.read.parquet(readPath(d.toString))
     val before = cur.count()
     val distinctRows = cur.dropDuplicates().coalesce(numFiles)
     val target = if (writeSub.isEmpty) tmp else new Path(tmp, writeSub)
     distinctRows.write.mode("overwrite").parquet(target.toString)
     val after = spark.read.parquet(target.toString).count()
-    mv(d, old)
-    mv(tmp, d)
-    fs.delete(old, true)
+    graft.VersionedDir.swapAside(fs, d)
     (before, after)
   }
 
@@ -1169,8 +1151,8 @@ object Dedup {
   }
 
   /** [[connectedComponents]] plus the number of alternating rounds it took —
-    * the observable ScaleProbe reads to back the O(log n) round-count claim
-    * with measurements instead of citation.
+    * the observable behind the O(log n) round-count claim, measured on
+    * long paths (SURVEY.md §6.1b) alongside the BENCH_sf1_probe*.json runs.
     */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, aCol: String, bCol: String,

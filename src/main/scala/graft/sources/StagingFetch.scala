@@ -98,7 +98,9 @@ object StagingFetch {
     *
     * The staged name is the URI's basename, REQUIRED to resolve inside
     * `stagingDir`: a URI path ending in `..` (or an empty/root path) would
-    * otherwise escape the staging dir (round-20 advice item 3).
+    * otherwise escape the staging dir (round-20 advice item 3). The
+    * reserved names `.src` and `.partial` are refused too: they are the
+    * staging dir's own sidecar and partial dirs.
     *
     * Retries the download+verify `attempts` times total with
     * `retryDelayMs` between tries (the reference's 3-attempt/60 s shape;
@@ -122,6 +124,9 @@ object StagingFetch {
     if (staged.getParent != root)
       throw new IOException(
         s"unsafe staged name '$name' from $remoteUri: resolves outside $root")
+    if (name == ".src" || name == ".partial")
+      throw new IOException(
+        s"reserved staged name '$name' from $remoteUri: collides with the staging dir's $name dir")
     val lock = nameLocks.computeIfAbsent(name, _ => new Object)
     lock.synchronized {
       val srcDir = root.resolve(".src")

@@ -4,7 +4,7 @@ import java.sql.Date
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.{Pipeline, SinkMode}
+import graft.{Pipeline, SinkMode, VersionedDir}
 import graft.operators.Layout
 
 /** One finalized user session (same shape/epoch-second semantics as the
@@ -153,10 +153,10 @@ object StreamingPipeline {
     // read the retry ledger BEFORE recordSystemFailures rewrites it: a
     // recovered file's row is pruned by the rewrite, and it is exactly the
     // signal that the file was consumed-and-excluded rather than fresh
-    val retryDir = java.nio.file.Paths.get(outDir, "reintentos")
+    val retryDir = s"$outDir/reintentos"
     val retryListed: Set[String] =
-      if (!java.nio.file.Files.exists(retryDir)) Set.empty
-      else spark.read.parquet(retryDir.toString)
+      if (!Pipeline.exists(spark, retryDir)) Set.empty
+      else spark.read.parquet(retryDir)
         .select("nombreArchivo").collect().map(_.getString(0)).toSet
     val dataPending = checks.collect { case (f, scala.util.Success((false, hdr))) => (f, hdr) }
     val (procGoodH, procBadH) = dataPending.filter { case (f, _) => retryListed(base(f)) }
@@ -364,8 +364,9 @@ object StreamingPipeline {
     // (1.95× uncached) is per-batch fixed work — delta-side recompute,
     // micro-batch planning — not index I/O. At 100 TB a session-pinned
     // index is the wrong shape anyway: executor-side columnar reads are
-    // the scale path. ScaleProbe r20s records the experiment; the cache
-    // stays behind graft.gate.cache=on as its experimental arm.)
+    // the scale path. SURVEY.md's round-20 ×10 drain record, run with
+    // BENCH_sf1_probe_r20.json, holds the experiment; the cache stays
+    // behind graft.gate.cache=on as its experimental arm.)
     val spark = docs.sparkSession
     val cache =
       if (sys.props.getOrElse("graft.gate.cache", "off") == "on")
@@ -728,9 +729,10 @@ object StreamingPipeline {
     * Replay protocol (same at-least-once discipline as [[dedupGateBatch]]):
     * the batch reads the newest version STRICTLY OLDER than its own batchId
     * (never the pointer — a crashed attempt of THIS batch may already have
-    * written/pointed its version), rewrites `stateDir/v=<batchId>` whole,
-    * then swaps the `_CURRENT` pointer for external readers. Every step is
-    * an overwrite keyed by batchId, so replays converge on identical state.
+    * written/published its version), rewrites `stateDir/v=<batchId>` whole,
+    * then publishes it for external readers ([[VersionedDir]]). Every step
+    * is an overwrite keyed by batchId, so replays converge on identical
+    * state.
     */
   def cdcApplyStream(changes: DataFrame, stateDir: String, checkpointDir: String,
                      key: String, attrs: Seq[String], opCol: String = "op",
@@ -813,132 +815,39 @@ object StreamingPipeline {
         new org.apache.hadoop.fs.Path(closedDir, s"_applied-$v"), false))
   }
 
-  /** One idempotent CDC micro-batch (see [[cdcApplyStream]]). */
-  /** Versions (`v=N` dirs with N < batchId) present in `stateDir`.
-    * toLongOption: a stray non-numeric v=* entry must not throw here —
-    * same contract as the SCD marker GC (skip foreign artifacts, don't
-    * fail the micro-batch).
+  /** The versioned state of a streaming sink: `v=<batchId>` dirs. */
+  private def stateVersions(spark: SparkSession, stateDir: String): VersionedDir =
+    new VersionedDir(stateDir, "v=%d", spark.sparkContext.hadoopConfiguration)
+
+  /** One replayable versioned-state micro-batch, the shared body of
+    * [[cdcApplyBatch]], [[countMinBatch]] and [[preferenceFoldBatch]]:
+    * `fold` the batch onto the newest version below `batchId` (None before
+    * the first), write the result as `v=<batchId>` and publish it.
     */
-  private def priorVersions(spark: SparkSession, stateDir: String,
-                            batchId: Long): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=") }
-      .flatMap(_.toLongOption)
-      .filter(_ < batchId)
+  private def foldVersion(spark: SparkSession, stateDir: String, batchId: Long)(
+      fold: Option[DataFrame] => DataFrame): Unit = {
+    val versions = stateVersions(spark, stateDir)
+    val base = versions.latestBelow(batchId).map(v => spark.read.parquet(versions.path(v)))
+    fold(base).write.mode("overwrite").parquet(versions.path(batchId))
+    versions.publish(batchId)
   }
 
+  /** One idempotent CDC micro-batch (see [[cdcApplyStream]]). */
   def cdcApplyBatch(batch: DataFrame, batchId: Long, stateDir: String,
                     key: String, attrs: Seq[String], opCol: String = "op",
-                    tsCol: String = "ts", tieCol: String = "seq"): Unit = {
-    import graft.operators.Cdc
-    val spark = batch.sparkSession
-    val prior = priorVersions(spark, stateDir, batchId)
-    val base = prior.sorted.lastOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v")
-      case None => batch.select((key +: attrs).map(col): _*).limit(0)
+                    tsCol: String = "ts", tieCol: String = "seq"): Unit =
+    foldVersion(batch.sparkSession, stateDir, batchId) { base =>
+      graft.operators.Cdc.applyLog(
+        base.getOrElse(batch.select((key +: attrs).map(col): _*).limit(0)),
+        batch, key, attrs, opCol, tsCol, tieCol)
     }
-    val next = Cdc.applyLog(base, batch, key, attrs, opCol, tsCol, tieCol)
-    next.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-    publishVersion(spark, stateDir, batchId, prior)
-  }
 
-  /** Publish `v=batchId` as `_CURRENT` (temp write + atomic rename) and GC
-    * all but the last two prior versions — the shared epilogue of every
-    * versioned-state stream sink ([[cdcApplyBatch]], [[countMinBatch]]).
-    */
-  private def publishVersion(spark: SparkSession, stateDir: String,
-                             batchId: Long, prior: Seq[Long]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pointer swap for external readers (same temp+rename discipline as the
-    // batch pipeline's versioned visitantes); replays rewrite it identically.
-    // The swap must be a single overwrite-rename: delete-then-rename opens a
-    // window where cdcCurrentState sees NO pointer and returns None, so use
-    // FileContext.rename(OVERWRITE) — atomic on HDFS-like stores — and it
-    // throws (rather than returning false like FileSystem.rename) if the
-    // swap fails, so a broken pointer is loud, not silent.
-    val tmp = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT.tmp"))
-    val out = fs.create(tmp, true)
-    try out.write(s"v=$batchId".getBytes("UTF-8")) finally out.close()
-    val cur = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT"))
-    // Object stores without an AbstractFileSystem binding (e.g. s3a by
-    // default) can't serve FileContext; fall back to delete+rename with
-    // the rename CHECKED. The no-pointer window reopens there, but those
-    // stores' "atomic" rename is delete+copy anyway — cdcCurrentState
-    // re-probes once to absorb the window.
-    def fallbackSwap(): Unit = {
-      if (fs.exists(cur)) fs.delete(cur, false)
-      if (!fs.rename(tmp, cur))
-        throw new java.io.IOException(
-          s"publishVersion: pointer swap $tmp -> $cur failed")
-    }
-    if (supportsFileContext(cur.toUri, spark.sparkContext.hadoopConfiguration)) {
-      // The cached probe can go stale if a DIFFERENT Configuration (another
-      // session in this JVM) loses the AbstractFileSystem binding — keep the
-      // catch so a stale `true` degrades to the fallback instead of killing
-      // the micro-batch after its data write.
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          cur.toUri, spark.sparkContext.hadoopConfiguration)
-        fc.rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException => fallbackSwap()
-      }
-    } else fallbackSwap()
-    // retain two prior versions for readers mid-swap; GC the rest
-    prior.sorted.dropRight(2).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$v"), true)
-    }
-  }
-
-  /** Whether `uri`'s store serves FileContext (an AbstractFileSystem
-    * binding exists). Probed ONCE per (scheme, authority) and cached: the
-    * swap strategy is a property of the store, not of the batch, and a
-    * FileContext-less store (e.g. s3a by default) would otherwise pay a
-    * thrown UnsupportedFileSystemException on every pointer swap.
-    */
-  private val fileContextSupport =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private def supportsFileContext(uri: java.net.URI,
-      conf: org.apache.hadoop.conf.Configuration): Boolean =
-    fileContextSupport.computeIfAbsent(
-      s"${uri.getScheme}://${Option(uri.getAuthority).getOrElse("")}",
-      _ => try {
-        org.apache.hadoop.fs.FileContext.getFileContext(uri, conf); true
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException => false
-      })
-
-  /** Read the CDC state table an external reader would see (pointer). One
-    * bounded re-probe on a missing pointer: on stores where the swap
-    * degrades to delete+rename (no FileContext binding) a reader can land
-    * in the no-pointer window; a single 50 ms retry absorbs that case. The
-    * retry only fires when a version dir ALREADY exists (so a swap could
-    * genuinely be in flight) — a never-created state dir, or one polled
-    * between creation and its first data write, returns None immediately
-    * instead of paying a driver sleep per call.
+  /** Read the state table an external reader would see: the published
+    * version, None before the first publish.
     */
   def cdcCurrentState(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    val cur = new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def anyVersionDir: Boolean = fs.exists(cur.getParent) &&
-      fs.listStatus(cur.getParent).exists(_.getPath.getName.startsWith("v="))
-    val present = fs.exists(cur) ||
-      (anyVersionDir && { Thread.sleep(50); fs.exists(cur) })
-    if (!present) None
-    else {
-      val in = fs.open(cur)
-      val v = try new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, "UTF-8")).readLine().trim
-      finally in.close()
-      Some(spark.read.parquet(s"$stateDir/$v"))
-    }
+    val versions = stateVersions(spark, stateDir)
+    versions.current.map(v => spark.read.parquet(versions.path(v)))
   }
 
   /** Continuous Count-Min maintenance — the streaming twin of cm1: each
@@ -949,7 +858,7 @@ object StreamingPipeline {
     * the whole point of sketching a stream — and the protocol is
     * [[cdcApplyBatch]]'s: v=batchId computed from the latest prior
     * version, replays recompute it identically (deterministic addition),
-    * `_CURRENT` published atomically, two prior versions retained.
+    * published atomically, two prior versions retained.
     * External readers resolve estimates against [[cdcCurrentState]]'s view
     * with [[graft.operators.Frequency.countMinEstimate]].
     */
@@ -965,20 +874,11 @@ object StreamingPipeline {
       .start()
 
   def countMinBatch(batch: DataFrame, batchId: Long, stateDir: String,
-                    itemCol: String, depth: Int, width: Int): Unit = {
-    import graft.operators.Frequency
-    val spark = batch.sparkSession
-    val prior = priorVersions(spark, stateDir, batchId)
-    val delta = Frequency.countMinCounters(batch, col(itemCol), depth, width)
-    val next = prior.sorted.lastOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v")
-        .unionByName(delta)
-        .groupBy("j", "idx").agg(sum(col("cnt")).as("cnt"))
-      case None => delta
+                    itemCol: String, depth: Int, width: Int): Unit =
+    foldVersion(batch.sparkSession, stateDir, batchId) { base =>
+      val delta = graft.operators.Frequency.countMinCounters(batch, col(itemCol), depth, width)
+      base.fold(delta)(_.unionByName(delta).groupBy("j", "idx").agg(sum(col("cnt")).as("cnt")))
     }
-    next.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-    publishVersion(spark, stateDir, batchId, prior)
-  }
 
   /** Streaming PREFERENCE-STATE fold — the fine-tuning tier's member of
     * the versioned-state family ([[cdcApplyBatch]], [[countMinBatch]]):
@@ -1010,19 +910,12 @@ object StreamingPipeline {
     */
   def preferenceFoldBatch(batch: DataFrame, batchId: Long, stateDir: String,
                           promptCol: String, idCol: String,
-                          qFpCol: String): Unit = {
-    import graft.operators.Preference
-    val spark = batch.sparkSession
-    val prior = priorVersions(spark, stateDir, batchId)
-    val delta = Preference.preferenceState(batch, promptCol, idCol, qFpCol)
-    val next = prior.sorted.lastOption match {
-      case Some(v) => Preference.mergePreferenceState(
-        spark.read.parquet(s"$stateDir/v=$v"), delta)
-      case None => delta
+                          qFpCol: String): Unit =
+    foldVersion(batch.sparkSession, stateDir, batchId) { base =>
+      import graft.operators.Preference
+      val delta = Preference.preferenceState(batch, promptCol, idCol, qFpCol)
+      base.fold(delta)(Preference.mergePreferenceState(_, delta))
     }
-    next.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-    publishVersion(spark, stateDir, batchId, prior)
-  }
 
   /** Live preference pairs from the last published state version (None
     * before the first publish) — what a sampling-loop consumer polls.

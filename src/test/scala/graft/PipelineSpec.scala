@@ -124,19 +124,38 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
       } finally s.close()
     }
     assert(versions() == Seq("v000001", "v000002")) // runs 1+2 (3-5 wrote no data)
-    // two more data batches with keepVersions = 1: old versions pruned,
-    // the pointer target survives, the table stays readable and correct
-    for ((name, day) <- Seq("report_e.txt" -> "2024-04-01", "report_f.txt" -> "2024-04-02")) {
+    // three more data batches push past the 3-version retention: old
+    // versions pruned, the pointer target survives, the table stays
+    // readable and correct
+    val days = Seq("report_e.txt" -> "2024-04-01", "report_f.txt" -> "2024-04-02",
+      "report_g.txt" -> "2024-04-03")
+    for ((name, day) <- days) {
       Files.write(inDir.resolve(name),
         (header + "\n" + s"eve@example.com,e,-,-,01/04/2024 09:00,,1,0,,0,0,-,-,-,-").getBytes)
-      Pipeline.runBatch(spark, inDir.toString, outDir.toString, Date.valueOf(day),
-        keepVersions = 1)
+      Pipeline.runBatch(spark, inDir.toString, outDir.toString, Date.valueOf(day))
     }
     val current = Files.readString(outDir.resolve("visitantes").resolve("_CURRENT")).trim
-    assert(versions() == Seq(current), s"versions=${versions()} current=$current")
+    assert(versions() == Seq("v000003", "v000004", "v000005") && versions().last == current,
+      s"versions=${versions()} current=$current")
     val vis = Pipeline.currentVisitantes(spark, outDir.toString).get
-    assert(vis.filter(col("email") === "eve@example.com").head().getInt(3) == 2)
+    assert(vis.filter(col("email") === "eve@example.com").head().getInt(3) == days.size)
     assert(vis.count() == 4) // alice, bob, dave, eve
+  }
+
+  test("a file: URI outDir keeps the ledger gate: a rerun merges nothing twice") {
+    val in2 = Files.createTempDirectory("graft_uri_in")
+    val out2 = Files.createTempDirectory("graft_uri_out")
+    Files.write(in2.resolve("report_a.txt"), reportA.mkString("\n").getBytes)
+    val uri = out2.toUri.toString.stripSuffix("/") // file:///tmp/graft_uri_out...
+    val asOf = Date.valueOf("2024-02-15")
+    assert(Pipeline.runBatch(spark, in2.toString, uri, asOf) == Pipeline.RunSummary(1, 3, 2))
+    assert(Pipeline.runBatch(spark, in2.toString, uri, asOf) == Pipeline.RunSummary(0, 0, 0))
+    val vis = Pipeline.currentVisitantes(spark, uri).get
+    assert(vis.filter(col("email") === "alice@example.com").head().getInt(3) == 2)
+    assert(spark.read.parquet(s"$out2/bitacora").count() == 1)
+    assert(Files.exists(out2.resolve("visitantes").resolve("_CURRENT")))
+    // java.nio would read the URI as the cwd-relative name file:/tmp/...
+    assert(!Files.exists(java.nio.file.Paths.get(uri)), "state written under <cwd>/file:")
   }
 
   test("scd history: closed extent byte-untouched across batches, versions correct") {

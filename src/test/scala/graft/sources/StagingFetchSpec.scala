@@ -164,6 +164,20 @@ class StagingFetchSpec extends AnyFunSuite {
     assert(Files.list(Paths.get(staging)).count() == 0)
   }
 
+  test("the reserved staged basenames .src and .partial are refused per file") {
+    val remote = tmpDir("sf_remote"); val staging = tmpDir("sf_staging")
+    val good = writeRemote(remote, "report_ok.txt", "fine")
+    val reserved = Seq(".src", ".partial").map(n => writeRemote(remote, n, "clobber"))
+    val (staged, failed) = StagingFetch.fetchAll(
+      new HadoopFsTransport(conf), good +: reserved, staging, 1, 0)
+    assert(staged.map(_.getFileName.toString) == Seq("report_ok.txt"))
+    assert(failed.map(_._1) == reserved)
+    failed.foreach { case (_, msg) => assert(msg.contains("reserved staged name"), msg) }
+    // the sidecar dir still holds only the good file's provenance
+    assert(Files.isDirectory(Paths.get(staging, ".src")))
+    assert(Files.readString(Paths.get(staging, ".src", "report_ok.txt")) == good)
+  }
+
   test("a staged file with no provenance sidecar (pre-sidecar residue) is re-fetched") {
     val remote = tmpDir("sf_remote"); val staging = tmpDir("sf_staging")
     val uri = writeRemote(remote, "report_i.txt", "fresh copy")

@@ -88,7 +88,7 @@ def main():
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
     # a typo'd name in EITHER list must be loud: an unmatched --skip would
     # silently RUN the intractable oracle the skip exists for (the
-    # ScaleProbe knownTags discipline)
+    # discipline the BENCH_sf1_probe*.json runs kept for their block tags)
     for flag, names in (("--only", only), ("--skip", skip)):
         missing = names - set(oracles)
         if missing:
