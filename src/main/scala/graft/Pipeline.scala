@@ -3,7 +3,8 @@ package graft
 import java.sql.{Date, DriverManager}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Layout, Merge, Prepare, Validate}
+import org.apache.spark.sql.types.{BooleanType, DateType, LongType, StringType, StructField, StructType}
+import graft.operators.{Layout, Materialize, Merge, Prepare, Validate}
 
 /** Where the pipeline's four relations (estadisticas, errores, visitantes,
   * bitacora) are materialized and read back from.
@@ -289,19 +290,31 @@ object Pipeline {
     * claims "filter already-processed files" but never implements it
     * (SURVEY.md §2.10) — here the ledger check makes reruns append-safe:
     * a processed file can never double-count into the visitantes merge.
+    * One job: the known ledger schema spares the parquet inference job, and
+    * `toSet` dedups on the driver, so there is no `distinct()` shuffle.
     */
   def processedFiles(spark: SparkSession, outDir: String,
                      sink: SinkMode = SinkMode.Parquet): Set[String] = sink match {
     case m: SinkMode.Jdbc =>
       if (!jdbcTableExists(m, "bitacora")) Set.empty
       else spark.read.jdbc(m.url, "bitacora", jdbcProps(m))
-        .select("nombreArchivo").distinct().collect().map(_.getString(0)).toSet
+        .select("nombreArchivo").collect().map(_.getString(0)).toSet
     case SinkMode.Parquet =>
       val bitDir = s"$outDir/bitacora"
       if (!exists(spark, bitDir)) Set.empty
-      else spark.read.parquet(bitDir)
-        .select("nombreArchivo").distinct().collect().map(_.getString(0)).toSet
+      else spark.read.schema(bitacoraSchema).parquet(bitDir)
+        .select("nombreArchivo").collect().map(_.getString(0)).toSet
   }
+
+  /** The bitacora ledger's schema: what [[processBatch]] and [[ledgerRows]]
+    * append, in their column order.
+    */
+  private val bitacoraSchema = StructType(Seq(
+    StructField("nombreArchivo", StringType),
+    StructField("registrosExitosos", LongType),
+    StructField("registrosFallidos", LongType),
+    StructField("estatus", StringType),
+    StructField("fechaProceso", DateType)))
 
   /** Existence on the path's own Hadoop FileSystem: `outDir` may be any
     * Hadoop URI (`file:`, `hdfs:`), which a local-path API would resolve as a
@@ -470,7 +483,7 @@ object Pipeline {
       else None
     case SinkMode.Parquet =>
       val versions = visitantesVersions(spark, outDir)
-      versions.current.map(v => spark.read.parquet(versions.path(v)))
+      versions.current.map(v => spark.read.schema(Merge.schema).parquet(versions.path(v)))
   }
 
   /** Full batch run. Returns per-run totals (the driver-visible contract the
@@ -532,28 +545,27 @@ object Pipeline {
     val layout = Validate.checkLayout(raw.drop("nombreArchivo"))
     require(layout.ok, s"layout check failed, missing columns: ${layout.missing.mkString(", ")}")
 
-    // All-empty batch (every expected file was header-only): a partitioned
-    // write of zero rows leaves no readable parquet behind, so skip the
-    // transform entirely and just ledger the files.
-    if (raw.isEmpty) {
-      emptyFileLedger(spark, outDir, expectedFiles, asOf, sink)
-      return RunSummary(expectedFiles.size.toLong, 0, 0)
-    }
-
     // P4-P8: flag + single-pass materialized split. The scratch dir must be
     // truncated WHOLE (static overwrite): under the session's dynamic
     // partition-overwrite mode, a batch with no invalid rows would leave the
     // previous run's is_valid=false partition in place and resurrect its
     // rows into this batch.
     val staged = s"$outDir/_staged"
-    Validate.withValidityFlags(raw)
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
+    val withFlags = Validate.withValidityFlags(raw)
+    withFlags.write.mode("overwrite").option("partitionOverwriteMode", "static")
       .partitionBy("is_valid").parquet(staged)
-    // Partition-column type inference never yields BooleanType — the
-    // `is_valid=true/false` directory names read back as STRING; restore the
-    // boolean the split predicate needs.
-    val flagged = spark.read.parquet(staged)
-      .withColumn("is_valid", col("is_valid").cast("boolean"))
+    // All-empty batch (every expected file was header-only): the write left
+    // no is_valid= partition dir, so there is nothing to transform — just
+    // ledger the files.
+    if (!Seq(true, false).exists(v => exists(spark, s"$staged/is_valid=$v"))) {
+      emptyFileLedger(spark, outDir, expectedFiles, asOf, sink)
+      return RunSummary(expectedFiles.size.toLong, 0, 0)
+    }
+    // Read back with the schema it was written with: the partition column
+    // moves last and keeps its BOOLEAN type, and no inference job runs.
+    val stagedSchema = StructType(
+      withFlags.schema.filterNot(_.name == "is_valid") :+ StructField("is_valid", BooleanType))
+    val flagged = spark.read.schema(stagedSchema).parquet(staged)
     val (ok, err) = Validate.split(flagged)
 
     // estadisticas: P11→P2→P12-15, reference column order. Parquet mode
@@ -578,8 +590,9 @@ object Pipeline {
 
     // visitantes: A1 delta + J1 merge, then the mode's replace protocol —
     // a new version published behind the atomic pointer on parquet, staging
-    // table + RENAME swap on JDBC.
-    val delta = Prepare.visitantes(prepared)
+    // table + RENAME swap on JDBC. The delta is aggregated once: the merge,
+    // the touched-key semi-join and the SCD batch all read the checkpoint.
+    val delta = Materialize.frame(Prepare.visitantes(prepared))
     val merged = currentVisitantes(spark, outDir, sink)
       .map(target => Merge.mergeVisitantes(target, delta, asOf))
       .getOrElse(delta)
@@ -611,7 +624,7 @@ object Pipeline {
         // history closes the pre-crash state with the re-merged state on
         // top; recovery is restoring the retained prior visitantes version
         // before rerunning.
-        val touched = spark.read.parquet(versionDir)
+        val touched = spark.read.schema(Merge.schema).parquet(versionDir)
           .join(delta.select("email"), Seq("email"), "left_semi")
           .withColumn("_eff", lit(asOf))
         operators.Scd.applyBatchDeltaDirs(spark,
@@ -619,14 +632,14 @@ object Pipeline {
           touched, "email", Merge.allCols.filterNot(_ == "email"), "_eff")
     }
 
-    // bitacora: the per-file ledger, appended last. Files the caller expected
-    // but that produced zero rows (header-only inputs) still get a ledger row
-    // — otherwise they are never marked processed and re-enter every run.
-    // One collect serves the append, the seen-set, and the totals: the frame
-    // is one row per file, and re-aggregating it would re-run the whole
-    // staged-read DAG per consumer.
-    val bit = Prepare.bitacora(ok, exploded).withColumn("fechaProceso", lit(asOf))
-    val rows = bit.collect() // one row per file — the whole DAG runs ONCE
+    // bitacora: the per-file ledger, appended last, from ONE aggregate over
+    // the staged flags (one scan, one shuffle; no split, explode or join).
+    // Files the caller expected but that produced zero rows (header-only
+    // inputs) still get a ledger row — otherwise they are never marked
+    // processed and re-enter every run. One collect serves the append, the
+    // seen-set and the totals: the frame is one row per file.
+    val bit = Prepare.bitacoraFromFlags(flagged).withColumn("fechaProceso", lit(asOf))
+    val rows = bit.collect()
     val collected = spark.createDataFrame(java.util.Arrays.asList(rows: _*), bit.schema)
     sink match {
       case m: SinkMode.Jdbc =>

@@ -3,6 +3,7 @@ package graft.operators
 import java.sql.Date
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, IntegerType, StringType, StructField, StructType}
 
 /** J1 — the `visitantes` keyed upsert (SURVEY.md §2.5).
   *
@@ -36,6 +37,13 @@ object Merge {
   val counterCols: Seq[String] = Seq("visitasTotales", "visitasAnioActual", "visitasMesActual")
   val dateCols: Seq[String] = Seq("fechaPrimeraVisita", "fechaUltimaVisita")
   val allCols: Seq[String] = Seq("email") ++ dateCols ++ counterCols
+
+  /** The visitantes table's schema, in [[allCols]] order: what
+    * [[Prepare.visitantes]] and [[mergeVisitantes]] produce, and what the
+    * engine reads its own visitantes versions back with (no inference job).
+    */
+  val schema: StructType = StructType(StructField("email", StringType) +:
+    (dateCols.map(StructField(_, DateType)) ++ counterCols.map(StructField(_, IntegerType))))
 
   /** Upsert `delta` into `target`; both sides shaped like
     * [[Prepare.visitantes]] output. Returns the merged table.

@@ -4,6 +4,7 @@ import java.awt.RenderingHints
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
@@ -27,17 +28,6 @@ import org.apache.spark.sql.types._
   * image itself.
   */
 object Multimodal {
-
-  // ImageIO's stream cache defaults to DISK-backed: every read/write through
-  // an Input/OutputStream wraps it in a FileCache stream that spills the
-  // payload to a temp file first — one file create+write+delete per image.
-  // The media lanes decode thousands of sub-KB PNGs per run, so the codec
-  // path was fs-bound before it was CPU-bound. Memory-cached streams decode
-  // and encode byte-identically; only the staging medium changes. Runs in
-  // the object initializer so every JVM that touches a codec op (driver or
-  // executor — the mapPartitions closures reference this object) flips it
-  // before the first decode.
-  ImageIO.setUseCache(false)
 
   /** Metadata carried next to every media payload. Struct field order is
     * the contract [[resizeImages]] relies on when rewriting metadata.
@@ -121,15 +111,26 @@ object Multimodal {
     writePng(img)
   }
 
+  // The codec hands ImageIO memory-cached streams. Given a plain
+  // Input/OutputStream, ImageIO wraps it in a DISK-backed cache stream by
+  // default: one temp file create+write+delete per image, and the media
+  // lanes decode thousands of sub-KB PNGs per run. Explicit streams keep
+  // that off this path without flipping the JVM-global
+  // `ImageIO.setUseCache`, which every other ImageIO user in the process
+  // would see. Memory-cached streams decode and encode byte-identically.
   private def writePng(img: BufferedImage): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
+    val out = new MemoryCacheImageOutputStream(bos)
+    try ImageIO.write(img, "png", out)
+    finally out.close() // flushes into bos; bos itself stays open
     bos.toByteArray
   }
 
   private def readImage(payload: Array[Byte]): Option[BufferedImage] =
     if (payload == null || payload.isEmpty) None
-    else Option(ImageIO.read(new ByteArrayInputStream(payload)))
+    // ImageIO.read closes the stream once a reader took it; when none
+    // does it returns null and the stream holds nothing but heap buffers
+    else Option(ImageIO.read(new MemoryCacheImageInputStream(new ByteArrayInputStream(payload))))
 
   /** Real decode: payload → (width, height, bands, per-channel means).
     * None when ImageIO has no codec for the bytes (garbage, or a format the

@@ -123,8 +123,9 @@ object Prepare {
   /** A3 in one pass over the flagged frame — no split, no explode, no
     * self-join: `registrosFallidos` sums each invalid row's failed-check
     * count directly (equal by construction to counting G1's exploded rows).
-    * One scan + one shuffle; the shape the reference lifecycle wants at
-    * 100 TB when the split isn't already materialized.
+    * One scan + one shuffle: [[graft.Pipeline.processBatch]]'s ledger
+    * aggregate. [[bitacora]] is the two-branch form it is spec-checked
+    * against.
     */
   def bitacoraFromFlags(flagged: DataFrame, fileCol: String = "nombreArchivo",
                         errorTags: Seq[(String, String)] = defaultErrorTags): DataFrame = {

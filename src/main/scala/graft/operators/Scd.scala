@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Slowly-changing-dimension Type 2 maintenance: apply a batch of attribute
@@ -23,33 +23,42 @@ import org.apache.spark.sql.functions._
   */
 object Scd {
 
-  /** The three change frames one Type-2 batch produces, plus the complete
-    * new open slice. Write protocol for a dimension laid out as an
-    * append-only closed extent + a small open slice: use [[writeDelta]]
-    * (or [[applyBatchDeltaDirs]] for the whole read-apply-write cycle).
-    * Writing by hand, BOTH frames must be materialized before the open
-    * slice's overwrite — when `dim` was read from `openDir`, every frame
-    * here carries lineage through that path, and
-    * `newOpen.write.mode("overwrite").parquet(openDir)` on the lazy plan
-    * either throws Spark's "Cannot overwrite a path that is also being read
-    * from" or, on stores without that guard, reads deleted files.
-    * The closed extent's existing files are never touched. `opened` and
-    * `firstSeen` are the two disjoint sources of new open rows (changed
-    * keys vs keys with no open row); both are already contained in
-    * `newOpen` and exposed for callers that audit or notify on them.
+  /** The change frames one Type-2 batch produces, plus the complete new
+    * open slice. All four are projections of ONE materialized frame,
+    * `changes`: the full-outer join of the open slice with the updates, each
+    * row tagged untouched/no-op, changed or first-seen ([[applyBatchDelta]]).
+    * None of them carries lineage through the dimension's source, so the
+    * open slice's overwrite reads only the checkpoint — even when `dim` was
+    * read from `openDir`, where a lazy plan would either throw Spark's
+    * "Cannot overwrite a path that is also being read from" or, on stores
+    * without that guard, read deleted files. Write protocol for a dimension
+    * laid out as an append-only closed extent + a small open slice:
+    * [[writeDelta]] (or [[applyBatchDeltaDirs]] for the whole
+    * read-apply-write cycle). The closed extent's existing files are never
+    * touched. `opened` and `firstSeen` are the two disjoint sources of new
+    * open rows (changed keys vs keys with no open row); both are already
+    * contained in `newOpen` and exposed for callers that audit or notify on
+    * them.
     */
   final case class ScdDelta(closedDelta: DataFrame, opened: DataFrame,
-                            firstSeen: DataFrame, newOpen: DataFrame)
+                            firstSeen: DataFrame, newOpen: DataFrame,
+                            changes: DataFrame)
 
-  /** Shared core: per-batch change detection against the OPEN slice only.
-    * Returns (open slice, changed keys with new attrs + `_eff`, opened rows,
-    * firstSeen rows) — every output column list is `key, attrs*, validFrom,
-    * validTo` except `changed` which carries `_eff` for the close join.
+  /** Tag column of [[ScdDelta.changes]] and its three values. */
+  private val ChangeCol = "_scd_change"
+  private val Keep = 0     // open row untouched by the batch, or a no-op update
+  private val Changed = 1  // open row closed at eff, new state opened
+  private val FirstSeen = 2 // update for a key with no open row
+
+  /** [[applyBatch]]'s change detection against the OPEN slice only.
+    * Returns (changed keys with new attrs + `_eff`, opened rows, firstSeen
+    * rows) — every output column list is `key, attrs*, validFrom, validTo`
+    * except `changed` which carries `_eff` for the close join.
     */
   private def changeParts(dim: DataFrame, updates: DataFrame, key: String,
                           attrs: Seq[String], effCol: String,
                           validFrom: String, validTo: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame) = {
     require(attrs.nonEmpty, "attrs must be non-empty")
     // The update batch feeds three branches (close, open, first-seen); if it
     // is itself derived from a fact-table aggregate, lazy recompute would
@@ -85,7 +94,7 @@ object Scd {
       .select(col(key) +: attrs.map(col) :+
         col(effCol).as(validFrom) :+ nullValidTo: _*)
 
-    (open, changed, opened, firstSeen)
+    (changed, opened, firstSeen)
   }
 
   /** Apply one update batch to a Type-2 dimension, returning the FULL new
@@ -112,7 +121,7 @@ object Scd {
                  validTo: String = "valid_to"): DataFrame = {
     val outCols: Seq[Column] =
       (key +: attrs).map(col) :+ col(validFrom) :+ col(validTo)
-    val (_, changed, opened, firstSeen) =
+    val (changed, opened, firstSeen) =
       changeParts(dim, updates, key, attrs, effCol, validFrom, validTo)
 
     // existing rows: open-and-changed rows get their interval closed at eff
@@ -137,6 +146,13 @@ object Scd {
     * are never rewritten. At 100 TB the closed extent is the bulk of the
     * dimension and strictly cold; this is the write path that keeps it so.
     *
+    * One full-outer join of the open slice with the updates, tagged per
+    * row and materialized once (eagerly, via [[Materialize.frame]]): the
+    * updates are read once, and every [[ScdDelta]] frame is a projection of
+    * the checkpoint. A side-presence flag, not the key, tells the sides
+    * apart, so a null key behaves as in [[applyBatch]]: a null-keyed open row
+    * passes through and a null-keyed update is first-seen.
+    *
     * Equivalence contract (spec-checked): for any (dim, updates),
     * `dim.filter(validTo.isNotNull) ∪ closedDelta ∪ newOpen` ==
     * `applyBatch(dim, updates, ...)` as a multiset.
@@ -145,46 +161,55 @@ object Scd {
                       attrs: Seq[String], effCol: String,
                       validFrom: String = "valid_from",
                       validTo: String = "valid_to"): ScdDelta = {
-    val outCols: Seq[Column] =
-      (key +: attrs).map(col) :+ col(validFrom) :+ col(validTo)
-    val (open, changed, opened, firstSeen) =
-      changeParts(dim, updates, key, attrs, effCol, validFrom, validTo)
+    require(attrs.nonEmpty, "attrs must be non-empty")
+    def d(a: String) = s"_d_$a" // the open row's value
+    def u(a: String) = s"_u_$a" // the update's value
+    val open = dim.filter(col(validTo).isNull).withColumn("_in", lit(true))
+    val upd = updates.withColumn("_in", lit(true))
+    val differs = attrs.map(a => !(col(s"d.$a") <=> col(s"u.$a"))).reduce(_ || _)
+    val change = when(col("u._in").isNull, Keep)
+      .when(col("d._in").isNull, FirstSeen)
+      .when(differs, Changed)
+      .otherwise(Keep)
+    val changes = Materialize.frame(
+      open.alias("d").join(upd.alias("u"), col(s"d.$key") === col(s"u.$key"), "full_outer")
+        .select(Seq(coalesce(col(s"d.$key"), col(s"u.$key")).as(key), change.as(ChangeCol)) ++
+          attrs.map(a => col(s"d.$a").as(d(a))) ++ attrs.map(a => col(s"u.$a").as(u(a))) ++
+          Seq(col(s"d.$validFrom").as(d(validFrom)), col(s"u.$effCol").as(u(effCol))): _*))
 
-    // just-closed rows: the changed keys' previously-open rows, interval
-    // closed at eff — the only rows that move from the open slice to the
-    // closed extent this batch.
-    val closedDelta = open.alias("d")
-      .join(changed.select(col(key), col("_eff")).alias("c"),
-        col(s"d.$key") === col(s"c.$key"))
-      .select(
-        (key +: attrs).map(a => col(s"d.$a").as(a)) :+
-          col(s"d.$validFrom").as(validFrom) :+
-          col("_eff").as(validTo): _*)
-
-    val survivors = open
-      .join(changed.select(key), Seq(key), "left_anti")
-      .select(outCols: _*)
-    val newOpen = survivors.unionByName(opened).unionByName(firstSeen)
-
-    ScdDelta(closedDelta.select(outCols: _*), opened, firstSeen, newOpen)
+    // the open NULL valid_to takes effCol's own type, as in changeParts
+    val nullValidTo = lit(null).cast(updates.schema(effCol).dataType).as(validTo)
+    def tagged(t: Int) = changes.filter(col(ChangeCol) === t)
+    val newState = (col(key) +: attrs.map(a => col(u(a)).as(a))) :+
+      col(u(effCol)).as(validFrom) :+ nullValidTo
+    val closedDelta = tagged(Changed).select(
+      (col(key) +: attrs.map(a => col(d(a)).as(a))) :+
+        col(d(validFrom)).as(validFrom) :+ col(u(effCol)).as(validTo): _*)
+    val keep = col(ChangeCol) === Keep
+    val newOpen = changes.select(
+      (col(key) +: attrs.map(a => when(keep, col(d(a))).otherwise(col(u(a))).as(a))) :+
+        when(keep, col(d(validFrom))).otherwise(col(u(effCol))).as(validFrom) :+
+        nullValidTo: _*)
+    ScdDelta(closedDelta, tagged(Changed).select(newState: _*),
+      tagged(FirstSeen).select(newState: _*), newOpen, changes)
   }
 
-  /** Write one [[ScdDelta]] to an open/closed-partitioned layout. Both
-    * frames are materialized (localCheckpoint) BEFORE any write: when the
-    * dimension was read from `openDir` their lineage still reads that path,
-    * and overwriting a path a pending lazy plan reads either throws or
-    * reads deleted files (see [[ScdDelta]]). The cold extent appends FIRST,
-    * so a crash between the two writes never loses closed history; it does
-    * leave the batch half-applied (closed rows present in the extent AND
-    * still open on disk), and re-running the same batch then re-appends the
-    * same closed rows — a single-writer caller needing exactly-once wraps
-    * the pair in its own versioned-pointer swap (the S5 pattern). Returns
-    * (closed, newOpen) row counts.
+  /** Write one [[ScdDelta]] to an open/closed-partitioned layout. Every
+    * frame is a projection of the one materialized `changes` join, so the
+    * open-slice overwrite reads only that checkpoint, never `openDir` (see
+    * [[ScdDelta]]), and both row counts come from one aggregate over it.
+    * The cold extent appends FIRST, so a crash between the two writes
+    * never loses closed history; it does leave the batch half-applied
+    * (closed rows present in the extent AND still open on disk), and
+    * re-running the same batch then re-appends the same closed rows — a
+    * single-writer caller needing exactly-once wraps the pair in its own
+    * versioned-pointer swap (the S5 pattern). Returns (closed, newOpen) row
+    * counts.
     */
   def writeDelta(delta: ScdDelta, closedDir: String, openDir: String): (Long, Long) = {
-    val closedM = Materialize.frame(delta.closedDelta)
-    val openM = Materialize.frame(delta.newOpen)
-    val nClosed = closedM.count()
+    val counts = delta.changes
+      .agg(count(when(col(ChangeCol) === Changed, true)), count(lit(1))).head()
+    val (nClosed, nOpen) = (counts.getLong(0), counts.getLong(1))
     // A no-change batch appends NOTHING to the cold extent (a continuous
     // stream's steady state is mostly no-change batches — unconditional
     // empty appends would accrete one file set per batch forever). The one
@@ -192,11 +217,11 @@ object Scd {
     // schema'd extent.
     val cdir = new org.apache.hadoop.fs.Path(closedDir)
     val cfs = cdir.getFileSystem(
-      delta.newOpen.sparkSession.sparkContext.hadoopConfiguration)
+      delta.changes.sparkSession.sparkContext.hadoopConfiguration)
     if (nClosed > 0 || !cfs.exists(cdir))
-      closedM.write.mode("append").parquet(closedDir)
-    openM.write.mode("overwrite").parquet(openDir)
-    (nClosed, openM.count())
+      delta.closedDelta.write.mode("append").parquet(closedDir)
+    delta.newOpen.write.mode("overwrite").parquet(openDir)
+    (nClosed, nOpen)
   }
 
   /** One whole Type-2 batch against a dimension ON DISK: read the open
@@ -213,12 +238,13 @@ object Scd {
                           validTo: String = "valid_to"): (Long, Long) = {
     val p = new org.apache.hadoop.fs.Path(openDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the open slice's schema follows from the updates' (what writeDelta
+    // wrote it with), so reading it back needs no inference job
+    val schema = updates.select(
+      (key +: attrs).map(col) :+ col(effCol).as(validFrom) :+ col(effCol).as(validTo): _*).schema
     val dim =
-      if (fs.exists(p)) spark.read.parquet(openDir)
-      else updates.select(
-        (key +: attrs).map(col) :+
-          col(effCol).as(validFrom) :+ col(effCol).as(validTo): _*)
-        .limit(0)
+      if (fs.exists(p)) spark.read.schema(schema).parquet(openDir)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     val delta = applyBatchDelta(dim, updates, key, attrs, effCol, validFrom, validTo)
     writeDelta(delta, closedDir, openDir)
   }

@@ -211,6 +211,116 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(dim.schema("valid_to").dataType ==
       org.apache.spark.sql.types.DateType)
   }
+
+  /** A fresh (inDir, outDir) pair holding the given report files. */
+  private def freshRun(files: (String, Seq[String])*): (Path, Path) = {
+    val in2 = Files.createTempDirectory("graft_gate_in")
+    val out2 = Files.createTempDirectory("graft_gate_out")
+    for ((name, lines) <- files) Files.write(in2.resolve(name), lines.mkString("\n").getBytes)
+    (in2, out2)
+  }
+
+  private def ledger(out: Path) = spark.read.parquet(s"$out/bitacora")
+    .select("nombreArchivo", "registrosExitosos", "registrosFallidos", "estatus")
+    .orderBy("nombreArchivo").collect()
+    .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
+
+  test("empty gate: a batch of only invalid rows stages only is_valid=false") {
+    val (in2, out2) = freshRun("report_x.txt" -> Seq(header,
+      "notanemail,z,-,-,01/02/2024 10:00,,1,0,,0,0,-,-,-,-",
+      "carol@example.com,w,-,-,99/99/2024 10:00,,1,0,,0,0,-,-,-,-"))
+    val s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-02-15"))
+    assert(s == Pipeline.RunSummary(1, 0, 2))
+    assert(Files.exists(out2.resolve("_staged").resolve("is_valid=false")))
+    assert(!Files.exists(out2.resolve("_staged").resolve("is_valid=true")))
+    assert(ledger(out2) == Seq(("report_x.txt", 0L, 2L, "Completado con errores")))
+    val err = spark.read.parquet(s"$out2/errores").select("email", "tipoError")
+      .orderBy("email").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(err == Seq(("carol@example.com", "Fecha envio"), ("notanemail", "Email")))
+    assert(Pipeline.currentVisitantes(spark, out2.toString).get.count() == 0)
+  }
+
+  test("empty gate: a batch of only valid rows stages only is_valid=true") {
+    val (in2, out2) = freshRun("report_b.txt" -> reportB)
+    val s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-03-20"))
+    assert(s == Pipeline.RunSummary(1, 2, 0))
+    assert(Files.exists(out2.resolve("_staged").resolve("is_valid=true")))
+    assert(!Files.exists(out2.resolve("_staged").resolve("is_valid=false")))
+    assert(ledger(out2) == Seq(("report_b.txt", 2L, 0L, "Completado")))
+    // zero error rows: the errores write leaves no file partition
+    assert(!Files.exists(out2.resolve("errores").resolve("nombreArchivo=report_b.txt")))
+    val vis = Pipeline.currentVisitantes(spark, out2.toString).get.orderBy("email").collect()
+    assert(vis.map(r => (r.getString(0), r.getInt(3))).toSeq ==
+      Seq(("alice@example.com", 1), ("dave@example.com", 1)))
+  }
+
+  test("empty gate: a header-only file processed together with a data file") {
+    val (in2, out2) = freshRun("report_a.txt" -> reportA, "report_h.txt" -> Seq(header))
+    val s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-02-15"))
+    assert(s == Pipeline.RunSummary(2, 3, 2))
+    assert(ledger(out2) == Seq(("report_a.txt", 3L, 2L, "Completado con errores"),
+      ("report_h.txt", 0L, 0L, "Completado")))
+    assert(spark.read.parquet(s"$out2/errores").count() == 2)
+    val vis = Pipeline.currentVisitantes(spark, out2.toString).get.orderBy("email").collect()
+    assert(vis.map(r => (r.getString(0), r.getInt(3))).toSeq ==
+      Seq(("alice@example.com", 2), ("bob@example.com", 1)))
+    // both files are ledgered: the rerun reads neither
+    assert(Pipeline.runBatch(spark, in2.toString, out2.toString,
+      Date.valueOf("2024-02-16")) == Pipeline.RunSummary(0, 0, 0))
+  }
+
+  /** Descriptions of the Spark jobs `body` starts (the callers' own thread
+    * and the threads it spawns, told apart by a job group). A marker job
+    * after `body` flushes the asynchronous listener bus: events arrive in
+    * order, so once the marker's start is seen, every earlier job's is too.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(s"${e.jobId}: ${e.stageInfos.maxBy(_.stageId).name}")
+          case Some(g) if g == s"$group-end" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job budget")
+      body
+      sc.setJobGroup(s"$group-end", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+      import scala.jdk.CollectionConverters._
+      jobs.asScala.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("job budget: a one-file runBatch onto existing state") {
+    // The daily increment's cost is per-job overhead, not data: every job
+    // here must do work the batch needs. A re-read, a re-aggregation or a
+    // parquet schema inference on an engine-owned dir shows up as extra jobs.
+    val (in2, out2) = freshRun("report_a.txt" -> reportA)
+    Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-02-15"))
+    Files.write(in2.resolve("report_b.txt"), reportB.mkString("\n").getBytes)
+    var s: Pipeline.RunSummary = null
+    val jobs = jobsOf {
+      s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-03-20"))
+    }
+    assert(s == Pipeline.RunSummary(1, 2, 0))
+    // 20 on this fixture: 1 ledger read, 1 staged write, 2 sink writes, 2 for
+    // the shared delta aggregate, 7 for the merge, the version write and the
+    // SCD join, 2 for the SCD counts, 2 SCD writes, 3 for the bitacora. The
+    // same increment ran 34 jobs when each consumer re-read or re-aggregated.
+    assert(jobs.size <= 20, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
 }
 
 /** The reference's literal sink family (MySQL append loaders + staging

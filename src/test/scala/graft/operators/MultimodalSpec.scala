@@ -365,4 +365,17 @@ class MultimodalSpec extends SparkSpec {
     val decoded = (0 until n).map(i => Multimodal.pcmSample(42L, i))
     assert(decoded.min < -16000 && decoded.max > 16000)
   }
+
+  test("the image codec leaves ImageIO's JVM-global stream cache setting alone") {
+    // ImageIO.getUseCache is process-wide: every ImageIO user in the JVM
+    // (driver and executors alike) sees it. Its JDK default is true, and
+    // nothing in the engine may flip it.
+    val before = javax.imageio.ImageIO.getUseCache
+    val png = Multimodal.encodePng(5, 3, 10, 20, 30)
+    assert(Multimodal.decodeImage(png).map(d => (d._1, d._2)).contains((5, 3)))
+    assert(Multimodal.decodeImages(Seq((1L, png)).toDF("id", "payload"))
+      .collect().length == 1)
+    assert(javax.imageio.ImageIO.getUseCache == before)
+    assert(before, "ImageIO's stream cache was switched off in this JVM")
+  }
 }

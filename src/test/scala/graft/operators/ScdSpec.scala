@@ -2,7 +2,9 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.SparkSpec
 
 /** SCD Type-2 apply: close-changed / open-new / insert-first-seen /
@@ -183,4 +185,93 @@ class ScdSpec extends SparkSpec {
       (1L, "bronze", ts("2024-01-01 00:00:00"), Some(ts("2024-06-01 00:00:00")))),
       closed.mkString("\n"))
   }
+
+  /** A seeded dimension plus one update batch covering every per-key case of
+    * the Type-2 contract: changed, no-op, untouched, tombstoned (all rows
+    * closed, must reopen), first-seen, null attrs on either side, and a null
+    * key on each side. `day` maps a day number to an effCol value.
+    * Returns (dim, updates, changed keys, first-seen keys); a null key is
+    * reported as None.
+    */
+  private def generated(seed: Long, effType: DataType, day: Int => AnyRef)
+      : (DataFrame, DataFrame, Set[Option[Long]], Set[Option[Long]]) = {
+    val rnd = new scala.util.Random(seed)
+    def tier(): String = Seq(null, "a", "b")(rnd.nextInt(3))
+    def score(): Integer = Seq[Integer](null, 1, 2)(rnd.nextInt(3))
+    val dimRows = Seq.newBuilder[Row]
+    val updRows = Seq.newBuilder[Row]
+    val changed, firstSeen = Set.newBuilder[Option[Long]]
+    val eff = day(100)
+    for (k <- 0L until 300L) {
+      val kind = rnd.nextInt(4) // 0 open only, 1 history + open, 2 tombstoned, 3 absent
+      val closedN = if (kind == 1 || kind == 2) 1 + rnd.nextInt(2) else 0
+      val starts = (0 to closedN).map(i => i * 20 + rnd.nextInt(10))
+      for (i <- 0 until closedN)
+        dimRows += Row(k, tier(), score(), day(starts(i)), day(starts(i + 1)))
+      val open = if (kind <= 1) Some((tier(), score())) else None
+      open.foreach { case (t, sc) => dimRows += Row(k, t, sc, day(starts(closedN)), null) }
+      if (rnd.nextInt(10) < 7) {
+        val (t, sc) = open.filter(_ => rnd.nextBoolean()).getOrElse((tier(), score()))
+        updRows += Row(k, t, sc, eff)
+        open match {
+          case Some(o) if o != ((t, sc)) => changed += Some(k) // == is null-safe here
+          case Some(_) =>
+          case None => firstSeen += Some(k)
+        }
+      }
+    }
+    dimRows += Row(null, "n", 1, day(5), null)
+    updRows += Row(null, "n", 1, eff)
+    firstSeen += None
+    val dimSchema = StructType(Seq(StructField("k", LongType), StructField("tier", StringType),
+      StructField("score", IntegerType), StructField("valid_from", effType),
+      StructField("valid_to", effType)))
+    val updSchema = StructType(dimSchema.fields.take(3) :+ StructField("eff", effType))
+    def df(rows: Seq[Row], schema: StructType) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    (df(dimRows.result(), dimSchema), df(updRows.result(), updSchema),
+      changed.result(), firstSeen.result())
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  for ((label, effType, day) <- Seq[(String, DataType, Int => AnyRef)](
+      ("DATE", DateType, d => java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(d))),
+      ("TIMESTAMP", TimestampType, d => Timestamp.valueOf(
+        java.time.LocalDateTime.of(2024, 1, 1, 6, 30).plusDays(d).plusMinutes(d)))))
+    test(s"applyBatchDelta == applyBatch over seeded dimensions, $label effCol; writeDelta counts") {
+      for (seed <- Seq(11L, 12L, 13L)) {
+        val (dim, updates, changed, firstSeen) = generated(seed, effType, day)
+        assert(changed.nonEmpty && firstSeen.size > 1, s"seed $seed misses a case")
+        val attrs = Seq("tier", "score")
+        val full = Scd.applyBatch(dim, updates, "k", attrs, "eff")
+
+        // the dimension on disk, read back: the open slice's overwrite must
+        // survive reading its own source
+        val root = java.nio.file.Files.createTempDirectory("scd_seeded").toString
+        val (closedDir, openDir) = (s"$root/closed", s"$root/open")
+        dim.filter(col("valid_to").isNotNull).write.parquet(closedDir)
+        dim.filter(col("valid_to").isNull).write.parquet(openDir)
+        val onDisk = spark.read.parquet(openDir).unionByName(spark.read.parquet(closedDir))
+        val delta = Scd.applyBatchDelta(onDisk, updates, "k", attrs, "eff")
+
+        def keys(f: DataFrame) = f.select("k").collect()
+          .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
+        assert(keys(delta.closedDelta) == changed, s"seed $seed")
+        assert(keys(delta.opened) == changed, s"seed $seed")
+        assert(keys(delta.firstSeen) == firstSeen, s"seed $seed")
+        assert(sameRows(dim.filter(col("valid_to").isNotNull)
+          .unionByName(delta.closedDelta).unionByName(delta.newOpen), full), s"seed $seed")
+
+        val (nClosed, nOpen) = Scd.writeDelta(delta, closedDir, openDir)
+        val (closedOnDisk, openOnDisk) = (spark.read.parquet(closedDir), spark.read.parquet(openDir))
+        assert(nClosed == changed.size && nOpen == openOnDisk.count(), s"seed $seed")
+        assert(nOpen == dim.filter(col("valid_to").isNull).count() + firstSeen.size)
+        assert(closedOnDisk.count() ==
+          dim.filter(col("valid_to").isNotNull).count() + nClosed, s"seed $seed")
+        assert(sameRows(closedOnDisk.unionByName(openOnDisk), full), s"seed $seed")
+        assert(openOnDisk.schema("valid_to").dataType == effType)
+      }
+    }
 }
