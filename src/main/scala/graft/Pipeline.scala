@@ -52,7 +52,8 @@ object JdbcReplace {
 }
 
 /** End-to-end batch assembly of the reference ETL (SURVEY.md §3, §7.1):
-  * glob scan → layout check (P16) → validity flags (P4-P6) → single-pass
+  * file listing → per-file admission gate ([[Pipeline.admit]]: ledger skip,
+  * layout check P16, retry horizon) → validity flags (P4-P6) → single-pass
   * valid/invalid materialization (P7/P8) → `estadisticas` (P11-P15) /
   * `visitantes` merge (A1+J1) / `errores` (G1+P1) / `bitacora` (A3).
   *
@@ -83,16 +84,15 @@ object Pipeline {
   /** One row per processed file, mirroring the reference's bitacora insert. */
   final case class RunSummary(files: Long, okRows: Long, errRows: Long)
 
-  /** S1+S3: glob scan of `report_*.txt` under `inputDir`, all columns raw
+  /** S1+S3: the CSV scan of the admitted report files, all columns raw
     * strings (validation precedes casts), rows tagged with their source file
     * (replaces the reference's per-file dispatch identity).
     */
-  def readReports(spark: SparkSession, inputDir: String): DataFrame =
+  def readReports(spark: SparkSession, files: Seq[String]): DataFrame =
     spark.read
       .option("header", "true")
-      .option("pathGlobFilter", "report_*.txt")
       .schema(Layout.rawSchema)
-      .csv(inputDir)
+      .csv(files: _*)
       .withColumn("nombreArchivo", element_at(split(input_file_name(), "/"), -1))
 
   /** S1: driver-side file listing (metadata only — never a data scan). */
@@ -102,6 +102,9 @@ object Pipeline {
     Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
       .map(_.getPath.toString).sorted
   }
+
+  /** A report path's file name: the key the ledgers store. */
+  def baseName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
 
   // ---------- JDBC sink plumbing (SinkMode.Jdbc) ----------
 
@@ -358,7 +361,7 @@ object Pipeline {
   }
 
   /** Ledger rows for wrong-layout files: recorded as 'Fallido' so they never
-    * re-enter processing. Shared by the batch driver and the streaming gate.
+    * re-enter processing: the admission gate's quarantine ([[admit]]).
     */
   def quarantine(spark: SparkSession, outDir: String, basenames: Seq[String], asOf: Date,
                  sink: SinkMode = SinkMode.Parquet): Unit =
@@ -394,7 +397,7 @@ object Pipeline {
     * RetryHorizonSpec pins the boundary in both batch and streaming form. A file that recovers
     * simply processes: its ledger row drops on the next rewrite. LAYOUT
     * failures never enter here — a wrong header is deterministic, so
-    * retrying cannot fix it and [[runBatch]] quarantines those immediately;
+    * retrying cannot fix it and [[admit]] quarantines those immediately;
     * mid-batch Spark failures stay whole-batch-rerun (the idempotent-rerun
     * contract subsumes the reference's task retry ladder).
     *
@@ -486,45 +489,69 @@ object Pipeline {
       versions.current.map(v => spark.read.schema(Merge.schema).parquet(versions.path(v)))
   }
 
-  /** Full batch run. Returns per-run totals (the driver-visible contract the
-    * reference exposes through bitacora).
+  /** The per-file admission decision of [[admit]]: the files to transform
+    * and the basenames it quarantined.
+    */
+  private[graft] final case class Admission(admitted: Seq[String], quarantined: Seq[String])
+
+  /** The per-file admission gate shared by [[runBatch]], the streaming
+    * micro-batch and the post-drain reconcile
+    * ([[graft.streaming.StreamingPipeline]]) — the reference dispatcher's
+    * per-file ladder (flows/orchestrator_flow.py:36-45), in this order:
+    *
+    *  1. files already in the bitacora ledger are dropped, so a rerun, a
+    *     replayed micro-batch or a file another entry already ledgered is
+    *     never merged twice;
+    *  2. each remaining file's header is checked ([[checkHeader]]); a throw
+    *     is a SYSTEM failure (ACL, truncation, upload race);
+    *  3. system failures go through the retry horizon
+    *     ([[recordSystemFailures]], with the caller's `partial`);
+    *  4. LAYOUT failures (deterministic: no retry fixes a wrong header) and
+    *     files past the horizon are quarantined with a 'Fallido' row;
+    *  5. the rest is admitted.
+    *
+    * `owns` narrows the unledgered files to those the caller is responsible
+    * for; it runs after the ledger skip, so ledgered files are never opened.
+    * With nothing pending the gate returns before step 3 — a no-op rerun
+    * costs the ledger read alone — unless `prune` is set: the reconcile,
+    * the streaming entry's only full-view caller, rewrites the retry ledger
+    * every time, so the rows of files a micro-batch has since processed
+    * drop.
+    */
+  private[graft] def admit(spark: SparkSession, outDir: String, files: Seq[String],
+                           asOf: Date, sink: SinkMode, horizonDays: Int,
+                           partial: Boolean = false, prune: Boolean = false,
+                           owns: String => Boolean = _ => true): Admission = {
+    val done = processedFiles(spark, outDir, sink)
+    val pending = files.filter(f => !done(baseName(f)) && owns(f))
+    if (pending.isEmpty && !prune) return Admission(Seq.empty, Seq.empty)
+    val checks = pending.map(f => f -> scala.util.Try(checkHeader(spark, f)))
+    val sysFailed = checks.collect { case (f, scala.util.Failure(e)) =>
+      (baseName(f), s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
+    }
+    val horizon = recordSystemFailures(spark, outDir, sysFailed, asOf, horizonDays, partial)
+    val (admitted, layoutBad) = checks
+      .collect { case (f, scala.util.Success(c)) => (f, c) }
+      .partition(_._2.ok)
+    val quarantined = layoutBad.map(p => baseName(p._1)) ++ horizon.expired
+    quarantine(spark, outDir, quarantined, asOf, sink)
+    Admission(admitted.map(_._1), quarantined)
+  }
+
+  /** Full batch run: every listed report file through [[admit]], the
+    * admitted ones through [[processBatch]]. Returns per-run totals (the
+    * driver-visible contract the reference exposes through bitacora);
+    * quarantined files count as processed files with no rows.
     */
   def runBatch(spark: SparkSession, inputDir: String, outDir: String, asOf: Date,
                sink: SinkMode = SinkMode.Parquet,
                retryHorizonDays: Int = 2): RunSummary = {
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    val done = processedFiles(spark, outDir, sink)
-    val pending = listReports(spark, inputDir).filterNot(p => done.contains(base(p)))
-    if (pending.isEmpty) return RunSummary(0, 0, 0)
-
-    // Per-file gate, two failure classes with different fates:
-    //  - LAYOUT failure (header readable, columns wrong): deterministic →
-    //    quarantined immediately ('Fallido' ledger row, never retried; the
-    //    reference's retry ladder cannot fix a wrong header either).
-    //  - SYSTEM failure (open/read threw — ACL, truncation, upload race):
-    //    transient → retried on subsequent runs until the reference's
-    //    2-day horizon (README.md:110-115), then quarantined
-    //    ([[recordSystemFailures]]).
-    val checks = pending.map(f => f -> scala.util.Try(checkHeader(spark, f)))
-    val sysFailed = checks.collect { case (f, scala.util.Failure(e)) =>
-      (base(f), s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-    }
-    val horizon = recordSystemFailures(spark, outDir, sysFailed, asOf, retryHorizonDays)
-    val (todo0, layoutBad) = checks
-      .collect { case (f, scala.util.Success(c)) => (f, c) }
-      .partition(_._2.ok)
-    val todo = todo0.map(_._1)
-    val toQuarantine = layoutBad.map(p => base(p._1)) ++ horizon.expired
-    quarantine(spark, outDir, toQuarantine, asOf, sink)
-    if (todo.isEmpty) return RunSummary(toQuarantine.size.toLong, 0, 0)
-
-    val raw = spark.read
-      .option("header", "true")
-      .schema(Layout.rawSchema)
-      .csv(todo: _*)
-      .withColumn("nombreArchivo", element_at(split(input_file_name(), "/"), -1))
-    val s = processBatch(spark, raw, outDir, asOf, expectedFiles = todo.map(base), sink = sink)
-    s.copy(files = s.files + toQuarantine.size)
+    val gate = admit(spark, outDir, listReports(spark, inputDir), asOf, sink, retryHorizonDays)
+    val quarantined = gate.quarantined.size.toLong
+    if (gate.admitted.isEmpty) return RunSummary(quarantined, 0, 0)
+    val s = processBatch(spark, readReports(spark, gate.admitted), outDir, asOf,
+      expectedFiles = gate.admitted.map(baseName), sink = sink)
+    s.copy(files = s.files + quarantined)
   }
 
   /** Transform + load for one batch of tagged raw rows — the shared core of

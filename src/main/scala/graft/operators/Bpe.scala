@@ -349,16 +349,6 @@ object Bpe {
     rows.toSeq.toDF("token_id", "symbol", "kind")
   }
 
-  /** Free a localCheckpointed frame's blocks. `Dataset.unpersist` is a
-    * NO-OP here — it only routes through the CacheManager, and
-    * localCheckpoint persists its RDD directly in the block manager
-    * without registering there (a round-15 review finding: the trainer's
-    * first drop attempt used it and freed nothing). The persisted RDD
-    * lives inside the checkpointed Dataset's `LogicalRDD`, so unpersist
-    * THAT. Only safe once nothing can recompute through it — the caller
-    * must have eagerly materialized the successor first (a locally
-    * checkpointed RDD has no lineage to rebuild from).
-    */
   /** Per-document BPE token count under a given merge table: symbolize
     * every token occurrence, fold the merge chain (codegen'd replaces),
     * sum symbol counts per document. Linear in corpus size, one shuffle

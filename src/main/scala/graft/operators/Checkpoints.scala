@@ -12,9 +12,11 @@ import org.apache.spark.sql.DataFrame
 object Checkpoints {
 
   /** Unpersist the checkpointed RDD(s) backing `df` (no-op on frames that
-    * are not local checkpoints). Only call once nothing will read `df`
-    * again — a consumer evaluated after the drop recomputes from a
-    * missing block and fails.
+    * are not local checkpoints). `Dataset.unpersist` cannot do this: it only
+    * routes through the CacheManager, where `localCheckpoint` never
+    * registers, so the RDD inside the frame's `LogicalRDD` is what must be
+    * unpersisted. Only call once nothing will read `df` again — a consumer
+    * evaluated after the drop recomputes from a missing block and fails.
     */
   def drop(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {

@@ -286,36 +286,16 @@ object Dedup {
                                   textCol: String, numPerms: Int = 16, bands: Int = 8,
                                   threshold: Double = 0.5,
                                   excludeIds: Option[DataFrame] = None): DataFrame = {
-    val spark = delta.sparkSession
-    incrementalSurvivorsFrames(
-      spark.read.parquet(s"$indexDir/sets"),
-      spark.read.parquet(s"$indexDir/bands"),
-      spark.read.parquet(s"$indexDir/fps"),
-      delta, idCol, textCol, numPerms, bands, threshold, excludeIds)
-  }
-
-  /** [[incrementalSurvivorsIndexed]]'s core over index FRAMES instead of an
-    * index DIRECTORY — the gate arithmetic is identical; only where the
-    * corpus side comes from differs. Exists so the streaming gate's bounded
-    * multi-batch drain can hold the index as localCheckpointed blocks
-    * ([[DedupIndexCache]]) instead of re-reading and re-decoding the parquet
-    * index once per micro-batch — the dominant cost of the 2.12× bounded-
-    * drain overhead the round-19 ×10 drain measured (SURVEY.md, with
-    * BENCH_sf1_probe_r19.json; round-19 verdict item 6).
-    */
-  def incrementalSurvivorsFrames(cSets0: DataFrame, cBands: DataFrame, cFps: DataFrame,
-                                 delta: DataFrame, idCol: String,
-                                 textCol: String, numPerms: Int = 16, bands: Int = 8,
-                                 threshold: Double = 0.5,
-                                 excludeIds: Option[DataFrame] = None): DataFrame = {
     require(numPerms % bands == 0, "numPerms must divide into bands")
     def excl(index: DataFrame): DataFrame =
       excludeIds.fold(index)(ids => index.join(ids, Seq(idCol), "left_anti"))
-    val cSets = excl(cSets0)
+    val spark = delta.sparkSession
+    def index(sub: String): DataFrame = excl(spark.read.parquet(s"$indexDir/$sub"))
+    val cSets = index("sets")
     val dSets = portableSets(delta, idCol, textCol)
     val cands = portableBandSigs(dSets, idCol, numPerms, bands)
       .select(col("band"), col("sig"), col(idCol).as("d"))
-      .join(excl(cBands)
+      .join(index("bands")
         .select(col("band"), col("sig"), col(idCol).as("c")), Seq("band", "sig"))
       .select("d", "c").distinct()
     val nearDrop = jaccardVerified(cands, dSets, cSets, idCol, "d", "c")
@@ -323,81 +303,12 @@ object Dedup {
       .select(col("d").as(idCol)).distinct()
     val exactDrop = delta
       .withColumn("fp", Text.fingerprint(col(textCol)))
-      .join(excl(cFps).select("fp").distinct(),
+      .join(index("fps").select("fp").distinct(),
         Seq("fp"), "left_semi")
       .select(col(idCol))
     delta
       .join(nearDrop, Seq(idCol), "left_anti")
       .join(exactDrop, Seq(idCol), "left_anti")
-  }
-
-  /** Drain-scoped in-memory view of a persisted dedup index: the three
-    * sub-indexes as localCheckpointed increments, so a bounded multi-batch
-    * streaming drain reads the parquet index ONCE and each micro-batch
-    * gates against block-manager blocks.
-    *
-    * EXPERIMENTAL ARM, not the default (round 20): round-19 verdict item 6
-    * hypothesized the bounded drain's 2.12× overhead was the per-batch
-    * parquet re-read; the r20s same-session control FALSIFIED it — the
-    * cached drain read 60.8 s vs 48.4 s uncached on the identical ×10
-    * backlog (cache_effect 0.80×, a pessimization: vectorized column-pruned
-    * parquet scans beat row-format checkpointed-block unions, the same
-    * codegen-first reasoning as the engine's no-UDF rule). Enabled only by
-    * `graft.gate.cache=on` so the probe can keep re-reading the experiment;
-    * the gate's default stays the columnar re-read, which is also the only
-    * shape that survives 100 TB (a session-pinned index does not).
-    *
-    * Consistency contract: [[admit]] mirrors every
-    * [[appendToDedupIndex]] the drain performs, so the cached view equals
-    * the on-disk index at each batch boundary. Duplicate cache entries
-    * (an at-least-once replay of a batch whose crashed attempt already
-    * appended to disk re-admits into the cache) are harmless exactly as
-    * duplicate DISK rows are — every index lookup is distinct/semi-join
-    * based, and the per-batch id exclusion keeps the gate result exact
-    * (the [[graft.streaming.StreamingPipeline.dedupGateBatch]] replay
-    * protocol). On RESTART a fresh cache re-reads the full on-disk index,
-    * which includes every committed append — nothing is lost with the
-    * process. Durability still lives on disk; the cache is a read path.
-    *
-    * Single-drain single-writer like the index itself; [[close]] releases
-    * the checkpointed blocks (the Centrality/Bpe leak class — a process
-    * that drains repeatedly must not accumulate one cached index per
-    * drain).
-    */
-  final class DedupIndexCache(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String,
-                              numPerms: Int = 16, bands: Int = 8) {
-    @volatile private var parts: List[(DataFrame, DataFrame, DataFrame)] =
-      List((spark.read.parquet(s"$indexDir/sets").localCheckpoint(),
-        spark.read.parquet(s"$indexDir/bands").localCheckpoint(),
-        spark.read.parquet(s"$indexDir/fps").localCheckpoint()))
-    private def unioned(f: ((DataFrame, DataFrame, DataFrame)) => DataFrame): DataFrame =
-      parts.map(f).reduce(_ unionByName _)
-    def sets: DataFrame = unioned(_._1)
-    def bandSigs: DataFrame = unioned(_._2)
-    def fps: DataFrame = unioned(_._3)
-    /** Mirror an [[appendToDedupIndex]] of `accepted` into the cached view.
-      * Derives the same three frames the disk append writes; each increment
-      * is its own checkpoint, so admitting never re-materializes the
-      * already-cached corpus.
-      */
-    def admit(accepted: DataFrame, idCol: String, textCol: String): Unit = {
-      val aSets = portableSets(accepted, idCol, textCol) // already a checkpoint
-      val aBands = Materialize.frame(portableBandSigs(aSets, idCol, numPerms, bands))
-      val aFps = Materialize.frame(accepted
-        .select(col(idCol), Text.fingerprint(col(textCol)).as("fp")))
-      parts = (aSets, aBands, aFps) :: parts
-    }
-    /** Idempotent: the gate's failure path, its termination listener, and
-      * its post-start isActive recheck may each call this.
-      */
-    def close(): Unit = {
-      val toDrop = parts
-      parts = Nil
-      toDrop.foreach { case (a, b, c) =>
-        Checkpoints.drop(a); Checkpoints.drop(b); Checkpoints.drop(c)
-      }
-    }
   }
 
   /** Compact the persisted dedup index in place: appends accumulate one

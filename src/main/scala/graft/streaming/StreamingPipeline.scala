@@ -21,14 +21,15 @@ final case class OpenSession(startMs: Long, lastMs: Long, n: Long)
   * The reference "streams" by listing an SFTP directory daily and fanning out
   * one Prefect subflow per file (flows/orchestrator_flow.py:16-56). The
   * Spark-native idiom is a file-source stream: the source discovers new
-  * files, the checkpoint records which files each micro-batch consumed
-  * (subsuming the bitacora dedup role the reference claims but never
-  * implements), and `Trigger.AvailableNow` gives the same "drain everything
-  * pending, then stop" semantics as the daily batch — one code path for both
-  * scheduled batch and continuous tailing.
+  * files, the checkpoint records which files each micro-batch consumed,
+  * and `Trigger.AvailableNow` gives the same "drain everything pending, then
+  * stop" semantics as the daily batch — one code path for both scheduled
+  * batch and continuous tailing.
   *
-  * Each micro-batch reuses [[Pipeline.processBatch]] verbatim, so batch and
-  * streaming runs are observably identical per file set.
+  * Each micro-batch reuses the batch's admission gate ([[Pipeline.admit]],
+  * which also skips files the bitacora ledger holds) and
+  * [[Pipeline.processBatch]] verbatim, so batch and streaming runs are
+  * observably identical per file set.
   */
 object StreamingPipeline {
 
@@ -47,12 +48,26 @@ object StreamingPipeline {
   /** Drain all currently-available files through the ETL, then stop.
     * `checkpointDir` carries processed-file state across restarts.
     *
-    * P16 layout gate: the schema-enforced stream read cannot itself fail
-    * layout (columns are imposed positionally), so each micro-batch's file
-    * set is recovered via `input_file_name()` and the same driver-side
-    * header check as [[Pipeline.runBatch]] runs per file — wrong-layout
-    * files are quarantined with a 'Fallido' ledger row and their (garbage)
-    * rows excluded, instead of silently parsing into the outputs.
+    * Each micro-batch's file set is recovered via `input_file_name()` and
+    * passed through the same per-file admission gate as
+    * [[Pipeline.runBatch]] ([[Pipeline.admit]]):
+    *  - files already in the bitacora ledger are skipped. A micro-batch that
+    *    Spark replays because it crashed after the ledger append and before
+    *    its commit-log entry is a no-op, and so is a file `runBatch` already
+    *    ledgered. The visitantes publish → ledger append window stays open
+    *    here as in the batch (README "Rerun idempotence"): a crash inside it
+    *    re-merges the replayed files.
+    *  - P16 layout gate: the schema-enforced stream read cannot itself fail
+    *    layout (columns are imposed positionally), so the driver-side header
+    *    check runs per file; wrong-layout files are quarantined with a
+    *    'Fallido' ledger row and their (garbage) rows excluded.
+    *  - a header check that THROWS although the source delivered rows (ACL
+    *    flipped, truncated rewrite, deletion race) goes through the
+    *    system-failure horizon; the file's rows are excluded and, since the
+    *    checkpoint never redelivers it, [[reconcilePendingFiles]] re-enters
+    *    it after recovery. `partial = true`: the micro-batch sees only its
+    *    own files, and a whole rewrite would erase every other pending
+    *    file's retry row (and the first-failure date the horizon runs on).
     *
     * `sink` routes each micro-batch through the SAME [[SinkMode]] switch as
     * the batch driver — the reference's MySQL-sink semantics (JDBC appends,
@@ -70,123 +85,69 @@ object StreamingPipeline {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val files = batch.select(input_file_name().as("f")).distinct()
           .collect().map(_.getString(0)).toSeq
-        def basenames(ps: Seq[String]) = ps.map(p => p.substring(p.lastIndexOf('/') + 1))
-        // the gate re-opens each file, which can THROW even though the
-        // source already delivered rows (ACL flipped, truncated rewrite,
-        // deletion race) — route those through the same system-failure
-        // horizon as runBatch instead of failing the whole micro-batch.
-        // Their rows are excluded and the file stays un-ledgered; since the
-        // checkpoint will never redeliver it, [[reconcilePendingFiles]]'s
-        // retry-ledger pickup is what re-enters it after recovery.
-        // partial = true: this micro-batch sees ONLY its own files — a
-        // whole rewrite here would erase the retry rows of every OTHER
-        // pending file (and with them the first-failure dates the horizon
-        // runs on), silently losing consumed-but-excluded files.
-        val checks = files.map(f => f -> scala.util.Try(Pipeline.checkHeader(spark, f)))
-        val sysFailed = checks.collect { case (f, scala.util.Failure(e)) =>
-          (basenames(Seq(f)).head,
-            s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-        }
-        val horizon = Pipeline.recordSystemFailures(spark, outDir, sysFailed, asOf,
-          horizonDays, partial = true)
-        val (good, bad) = checks
-          .collect { case (f, scala.util.Success(c)) => (f, c) }
-          .partition(_._2.ok)
-        Pipeline.quarantine(spark, outDir,
-          basenames(bad.map(_._1)) ++ horizon.expired, asOf, sink)
-        if (good.nonEmpty) {
-          val goodFiles = good.map(_._1)
-          val goodBatch =
-            if (goodFiles.size == files.size) batch
-            else batch.filter(input_file_name().isin(goodFiles: _*))
-          Pipeline.processBatch(spark, goodBatch, outDir, asOf,
-            expectedFiles = basenames(goodFiles), sink = sink)
+        val admitted = Pipeline.admit(spark, outDir, files, asOf, sink, horizonDays,
+          partial = true).admitted
+        if (admitted.nonEmpty) {
+          val admittedBatch =
+            if (admitted.size == files.size) batch
+            else batch.filter(input_file_name().isin(admitted: _*))
+          Pipeline.processBatch(spark, admittedBatch, outDir, asOf,
+            expectedFiles = admitted.map(Pipeline.baseName), sink = sink)
         }
         ()
       }
       .start()
 
-  /** Post-drain reconciliation — the streaming dispatcher's counterpart of
-    * [[Pipeline.runBatch]]'s per-file failure ladder, run after an
-    * AvailableNow drain completes. Handles the pending (listed, not yet
-    * ledgered) file classes the stream itself cannot:
+  /** Post-drain reconciliation: the pending (listed, not yet ledgered) files
+    * the stream itself cannot deliver, run through the same admission gate
+    * ([[Pipeline.admit]]) and [[Pipeline.processBatch]] as the batch driver.
+    * It owns three classes:
     *
     *  - ZERO-ROW files: a header-only file emits no rows, so it is
     *    invisible to `foreachBatch` (whose file set derives from
-    *    `input_file_name()` over data rows) — it gets its header check and
-    *    ledger row here ('Fallido' on bad layout, 'Completado' 0/0).
+    *    `input_file_name()` over data rows). The gate quarantines a bad
+    *    header; `processBatch` ledgers a good one 'Completado' 0/0.
     *  - SYSTEM-FAILING files (open throws — broken ACL, truncated upload,
     *    a directory wearing a report name): the file source never delivers
-    *    them, so without this ladder they would silently never surface.
-    *    Routed through [[Pipeline.recordSystemFailures]], exactly
-    *    runBatch's 2-day horizon (README.md:110-115): retried while the
-    *    horizon holds — on recovery the source delivers them on the next
-    *    drain — and quarantined 'Fallido' once it passes.
-    *  - CONSUMED-BUT-EXCLUDED files: the in-batch gate hit a system
-    *    failure after the source had already delivered the rows
-    *    ([[runAvailableNow]]'s Try ladder). The checkpoint will never
-    *    redeliver them, so a pending DATA file carrying an open
-    *    retry-ledger row is re-processed through the batch path here once
-    *    it reads again.
+    *    them, so without this pass they would silently never surface. The
+    *    gate's retry horizon (README.md:110-115) retries them while it
+    *    holds — on recovery the source delivers them on the next drain —
+    *    and quarantines them 'Fallido' once it passes.
+    *  - CONSUMED-BUT-EXCLUDED files: the micro-batch gate hit a system
+    *    failure after the source had already delivered the rows. The
+    *    checkpoint will never redeliver them, so a pending data file that
+    *    carries a retry-ledger row is processed here once it reads again.
     *
     * Pending data files with NO retry row are left alone (they belong to
-    * the stream — e.g. a file that arrived after the drain). Single-writer
-    * assumption as elsewhere; every step is idempotent (re-runs converge).
+    * the stream — e.g. a file that arrived after the drain). The gate
+    * rewrites the retry ledger before `processBatch` runs, so a crash in
+    * between drops a recovered consumed-but-excluded file's retry row, and
+    * with it this pass's claim on the file: `runBatch` over the same input
+    * still picks it up. Single-writer assumption as elsewhere; every step
+    * is idempotent (re-runs converge).
     */
   def reconcilePendingFiles(spark: SparkSession, inputDir: String,
                             outDir: String, asOf: Date,
                             sink: SinkMode = SinkMode.Parquet,
                             horizonDays: Int = 2): Unit = {
-    val done = Pipeline.processedFiles(spark, outDir, sink)
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    val pending = Pipeline.listReports(spark, inputDir).filterNot(f => done(base(f)))
-    // BOTH opens (zero-row probe + header check) inside one Try: the file
-    // can vanish/truncate/lose ACL between the two, and a throw from the
-    // second open must route to the same system-failure horizon as the
-    // first — not crash the whole reconcile and skip every other pending
-    // file's ledgering.
-    val checks = pending.map(f => f -> scala.util.Try(
-      (Pipeline.isHeaderOnly(spark, f), Pipeline.checkHeader(spark, f))))
-    val sysFailed = checks.collect { case (f, scala.util.Failure(e)) =>
-      (base(f), s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
-    }
-    // read the retry ledger BEFORE recordSystemFailures rewrites it: a
-    // recovered file's row is pruned by the rewrite, and it is exactly the
-    // signal that the file was consumed-and-excluded rather than fresh
-    val retryDir = s"$outDir/reintentos"
-    val retryListed: Set[String] =
+    // read before the gate rewrites the retry ledger: a recovered file's
+    // row is pruned by that rewrite, and it is exactly the signal that the
+    // file was consumed-and-excluded rather than fresh
+    lazy val retryListed: Set[String] = {
+      val retryDir = s"$outDir/reintentos"
       if (!Pipeline.exists(spark, retryDir)) Set.empty
       else spark.read.parquet(retryDir)
         .select("nombreArchivo").collect().map(_.getString(0)).toSet
-    val dataPending = checks.collect { case (f, scala.util.Success((false, hdr))) => (f, hdr) }
-    val (procGoodH, procBadH) = dataPending.filter { case (f, _) => retryListed(base(f)) }
-      .partition(_._2.ok)
-    val (procGood, procBad) = (procGoodH.map(_._1), procBadH.map(_._1))
-    if (procGood.nonEmpty) {
-      val raw = spark.read
-        .option("header", "true")
-        .schema(Layout.rawSchema)
-        .csv(procGood: _*)
-        .withColumn("nombreArchivo", element_at(split(input_file_name(), "/"), -1))
-      Pipeline.processBatch(spark, raw, outDir, asOf,
-        expectedFiles = procGood.map(base), sink = sink)
     }
-    val horizon = Pipeline.recordSystemFailures(spark, outDir, sysFailed, asOf, horizonDays)
-    val headerOnly = checks.collect { case (f, scala.util.Success((true, hdr))) => (f, hdr) }
-    val (okHeaderH, badHeaderH) = headerOnly.partition(_._2.ok)
-    val (okHeader, badHeader) = (okHeaderH.map(_._1), badHeaderH.map(_._1))
-    Pipeline.quarantine(spark, outDir,
-      badHeader.map(base) ++ procBad.map(base) ++ horizon.expired, asOf, sink)
-    Pipeline.ledgerRows(spark, outDir, okHeader.map(base), asOf, "Completado", sink)
+    def owns(f: String): Boolean =
+      retryListed(Pipeline.baseName(f)) ||
+        scala.util.Try(Pipeline.isHeaderOnly(spark, f)).getOrElse(true)
+    val admitted = Pipeline.admit(spark, outDir, Pipeline.listReports(spark, inputDir),
+      asOf, sink, horizonDays, prune = true, owns = owns).admitted
+    if (admitted.nonEmpty)
+      Pipeline.processBatch(spark, Pipeline.readReports(spark, admitted), outDir, asOf,
+        expectedFiles = admitted.map(Pipeline.baseName), sink = sink)
   }
-
-  /** Round-12 name for the zero-row slice of [[reconcilePendingFiles]];
-    * kept as a forwarder so existing callers pick up the full ladder.
-    */
-  def reconcileZeroRowFiles(spark: SparkSession, inputDir: String,
-                            outDir: String, asOf: Date,
-                            sink: SinkMode = SinkMode.Parquet): Unit =
-    reconcilePendingFiles(spark, inputDir, outDir, asOf, sink)
 
   /** Streaming sessionization with CUSTOM state — the charter's
     * `flatMapGroupsWithState` surface (`session_window` covers the declarative
@@ -353,59 +314,14 @@ object StreamingPipeline {
   def dedupGateStream(docs: DataFrame, indexDir: String, outDir: String,
                       checkpointDir: String, idCol: String = "doc_id",
                       textCol: String = "text",
-                      threshold: Double = 0.5): StreamingQuery = {
-    // Per-batch parquet index reads are the DEFAULT — measured, not assumed
-    // (round-19 verdict item 6 hypothesized the bounded drain's 2.12×
-    // overhead was the per-batch index re-read and prescribed a drain-scoped
-    // cache; the round-20 same-session control FALSIFIED it: cached 60.8 s
-    // vs uncached 48.4 s on the identical ×10 drain — cache_effect 0.80×.
-    // A vectorized, column-pruned parquet scan beats row-format
-    // checkpointed-block unions, and the residual bounded-drain overhead
-    // (1.95× uncached) is per-batch fixed work — delta-side recompute,
-    // micro-batch planning — not index I/O. At 100 TB a session-pinned
-    // index is the wrong shape anyway: executor-side columnar reads are
-    // the scale path. SURVEY.md's round-20 ×10 drain record, run with
-    // BENCH_sf1_probe_r20.json, holds the experiment; the cache stays
-    // behind graft.gate.cache=on as its experimental arm.)
-    val spark = docs.sparkSession
-    val cache =
-      if (sys.props.getOrElse("graft.gate.cache", "off") == "on")
-        Some(new graft.operators.Dedup.DedupIndexCache(spark, indexDir))
-      else None
-    // close-on-start-failure (round-20 advice): the cache eagerly
-    // localCheckpoints the whole index at construction; if start() throws,
-    // no termination listener ever registers and the blocks would leak for
-    // the session — the exact class the close() path exists to prevent
-    val query = try {
-      docs.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          dedupGateBatch(batch, batchId, indexDir, outDir, idCol, textCol, threshold,
-            cache)
-        }
-        .start()
-    } catch {
-      case t: Throwable => cache.foreach(_.close()); throw t
-    }
-    // release the cache's blocks when THIS query terminates — an
-    // AvailableNow drain is bounded, but a caller that drains repeatedly
-    // (the daily gate) must not accumulate one cached index per drain
-    cache.foreach { c =>
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-          if (e.id == query.id) {
-            c.close()
-            spark.streams.removeListener(this)
-          }
+                      threshold: Double = 0.5): StreamingQuery =
+    docs.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        dedupGateBatch(batch, batchId, indexDir, outDir, idCol, textCol, threshold)
       }
-      spark.streams.addListener(listener)
-    }
-    query
-  }
+      .start()
 
   /** One idempotent micro-batch of the dedup gate. Replay protocol, in
     * order, so an at-least-once replay of batch N re-emits rather than
@@ -427,8 +343,7 @@ object StreamingPipeline {
     */
   def dedupGateBatch(batch: DataFrame, batchId: Long, indexDir: String, outDir: String,
                      idCol: String = "doc_id", textCol: String = "text",
-                     threshold: Double = 0.5,
-                     cache: Option[graft.operators.Dedup.DedupIndexCache] = None): Unit = {
+                     threshold: Double = 0.5): Unit = {
     import graft.operators.Dedup
     val exactKeepers = Dedup.exactByFingerprint(batch, textCol, idCol).select(idCol)
     val selfExact = batch.join(exactKeepers, Seq(idCol), "left_semi")
@@ -436,19 +351,10 @@ object StreamingPipeline {
       .minhashLshPortable(selfExact, idCol, textCol, threshold = threshold)
       .select(col("b").as(idCol)).distinct()
     val selfDeduped = selfExact.join(nearSelfDrop, Seq(idCol), "left_anti")
-    // survivors feed two sinks (output + index append); compute once.
-    // With a drain-scoped cache the corpus side comes from checkpointed
-    // blocks instead of a per-batch parquet re-read — same gate arithmetic
-    // ([[graft.operators.Dedup.incrementalSurvivorsFrames]] is the shared
-    // core), same exclusion-based replay protocol.
-    val excl = Some(selfDeduped.select(idCol))
-    val survivors = cache.fold(
-      Dedup.incrementalSurvivorsIndexed(
-        indexDir, selfDeduped, idCol, textCol, threshold = threshold,
-        excludeIds = excl))(c =>
-      Dedup.incrementalSurvivorsFrames(
-        c.sets, c.bandSigs, c.fps, selfDeduped, idCol, textCol,
-        threshold = threshold, excludeIds = excl)).localCheckpoint()
+    // survivors feed two sinks (output + index append); compute once
+    val survivors = Dedup.incrementalSurvivorsIndexed(
+      indexDir, selfDeduped, idCol, textCol, threshold = threshold,
+      excludeIds = Some(selfDeduped.select(idCol))).localCheckpoint()
     survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_committed/batch-$batchId")
     val fs = marker.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
@@ -456,9 +362,6 @@ object StreamingPipeline {
       Dedup.appendToDedupIndex(survivors, idCol, textCol, indexDir)
       fs.mkdirs(marker)
     }
-    // mirror the append into the drain cache (duplicate admissions on a
-    // marker-skip replay are harmless — see DedupIndexCache's contract)
-    cache.foreach(_.admit(survivors, idCol, textCol))
     // release the per-batch snapshot: a long-lived stream otherwise pins
     // one checkpointed RDD per micro-batch (the Centrality/Bpe leak class)
     graft.operators.Checkpoints.drop(survivors)

@@ -321,6 +321,17 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     // same increment ran 34 jobs when each consumer re-read or re-aggregated.
     assert(jobs.size <= 20, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
+
+  test("job budget: a no-op runBatch runs the ledger read alone") {
+    val (in2, out2) = freshRun("report_a.txt" -> reportA)
+    Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-02-15"))
+    var s: Pipeline.RunSummary = null
+    val jobs = jobsOf {
+      s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-02-16"))
+    }
+    assert(s == Pipeline.RunSummary(0, 0, 0))
+    assert(jobs.size == 1, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
 }
 
 /** The reference's literal sink family (MySQL append loaders + staging

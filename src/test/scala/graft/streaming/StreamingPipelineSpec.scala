@@ -59,7 +59,7 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     val q = StreamingPipeline.runAvailableNow(
       spark, inDir.toString, outDir.toString, ckDir.toString, Date.valueOf("2024-04-01"))
     q.awaitTermination(120000)
-    StreamingPipeline.reconcileZeroRowFiles(
+    StreamingPipeline.reconcilePendingFiles(
       spark, inDir.toString, outDir.toString, Date.valueOf("2024-04-01"))
     val bit = spark.read.parquet(s"$outDir/bitacora")
       .filter(col("nombreArchivo").startsWith("report_empty"))
@@ -67,7 +67,7 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(bit == Map("report_empty_ok.txt" -> "Completado",
       "report_empty_bad.txt" -> "Fallido"))
     // idempotent: a second reconcile adds nothing
-    StreamingPipeline.reconcileZeroRowFiles(
+    StreamingPipeline.reconcilePendingFiles(
       spark, inDir.toString, outDir.toString, Date.valueOf("2024-04-01"))
     assert(spark.read.parquet(s"$outDir/bitacora")
       .filter(col("nombreArchivo").startsWith("report_empty")).count() == 2)
@@ -107,11 +107,63 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     val q3 = StreamingPipeline.runAvailableNow(spark, jIn.toString, jOut.toString,
       jCk.toString, Date.valueOf("2024-03-21"), sink = sink)
     q3.awaitTermination(120000)
-    StreamingPipeline.reconcileZeroRowFiles(spark, jIn.toString, jOut.toString,
+    StreamingPipeline.reconcilePendingFiles(spark, jIn.toString, jOut.toString,
       Date.valueOf("2024-03-21"), sink = sink)
     val led = spark.read.jdbc(sink.url, "bitacora", props)
       .filter(col("nombreArchivo") === "report_j_empty.txt").collect()
     assert(led.length == 1 && led(0).getAs[String]("estatus") == "Completado")
+  }
+
+  /** The ETL state a double merge would change: Σ visitasTotales, the
+    * visitantes key set, the bitacora row count and the errores rows.
+    */
+  private def etlState(out: Path): (Long, Set[String], Long, Seq[String]) = {
+    val vis = Pipeline.currentVisitantes(spark, out.toString).get
+    (vis.agg(sum("visitasTotales")).head().getLong(0),
+      vis.select("email").collect().map(_.getString(0)).toSet,
+      spark.read.parquet(s"$out/bitacora").count(),
+      spark.read.parquet(s"$out/errores").collect().map(_.mkString("|")).sorted.toSeq)
+  }
+
+  private def writeReplayReport(dir: Path): Unit =
+    Files.write(dir.resolve("report_r1.txt"),
+      (header + "\nalice@example.com,x,-,-,01/02/2024 10:00,,1,0,,0,0,-,-,-,-" +
+        "\nbob@example.com,x,-,-,02/02/2024 11:00,,2,0,,1,0,-,-,-,-" +
+        "\nbadmail,x,-,-,01/02/2024 10:00,,1,0,,0,0,-,-,-,-").getBytes)
+
+  test("a micro-batch replayed after its ledger append (commit log lost) merges nothing twice") {
+    val rIn = Files.createTempDirectory("st_replay_in")
+    val rOut = Files.createTempDirectory("st_replay_out")
+    val rCk = Files.createTempDirectory("st_replay_ck")
+    writeReplayReport(rIn)
+    def drain(): Unit = StreamingPipeline.runAvailableNow(spark, rIn.toString, rOut.toString,
+      rCk.toString, Date.valueOf("2024-02-15")).awaitTermination(120000)
+    drain()
+    val before = etlState(rOut)
+    assert(before._1 == 2 && before._3 == 1, s"first drain: $before")
+    // the crash after processBatch and before Spark's commit: the batch's
+    // commit-log entry is missing, so the restart replays the batch
+    val commits = rCk.resolve("commits")
+    val last = commits.toFile.list().filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    Files.delete(commits.resolve(last))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    drain()
+    assert(Files.exists(commits.resolve(last)), s"batch $last was not replayed")
+    assert(etlState(rOut) == before)
+  }
+
+  test("a file runBatch already ledgered is not merged again when the stream delivers it") {
+    val bIn = Files.createTempDirectory("st_ledgered_in")
+    val bOut = Files.createTempDirectory("st_ledgered_out")
+    val bCk = Files.createTempDirectory("st_ledgered_ck")
+    writeReplayReport(bIn)
+    Pipeline.runBatch(spark, bIn.toString, bOut.toString, Date.valueOf("2024-02-15"))
+    val before = etlState(bOut)
+    StreamingPipeline.runAvailableNow(spark, bIn.toString, bOut.toString, bCk.toString,
+      Date.valueOf("2024-02-16")).awaitTermination(120000)
+    assert(new java.io.File(bCk.toFile, "commits").list().nonEmpty,
+      "the stream delivered no batch")
+    assert(etlState(bOut) == before)
   }
 
   test("streaming dedup gate: persisted index drops corpus dups, self dups, and CROSS-BATCH dups") {
@@ -218,16 +270,6 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(oneShot == expected, s"one-shot drain admitted $oneShot")
     assert(boundedIdx == oneShotIdx,
       s"index diverged: bounded $boundedIdx rows vs one-shot $oneShotIdx")
-    // the drain-scoped index cache (graft.gate.cache=on — the measured-and-
-    // rejected experimental arm, see DedupIndexCache's scaladoc) must be
-    // answer-identical to the default per-batch columnar re-read
-    sys.props("graft.gate.cache") = "on"
-    val (cached, cachedIdx, cachedBatches) =
-      try drain(Some(1)) finally sys.props.remove("graft.gate.cache")
-    assert(cachedBatches == fileDocs.size)
-    assert(cached == expected, s"cached drain admitted $cached")
-    assert(cachedIdx == oneShotIdx,
-      s"cached index diverged: $cachedIdx rows vs one-shot $oneShotIdx")
   }
 
   test("dedup gate replay re-emits survivors instead of re-filtering (at-least-once safety)") {
