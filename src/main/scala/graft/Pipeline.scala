@@ -694,10 +694,10 @@ object Pipeline {
   /** Shared bitacora ledger-row writer (schema in ONE place — quarantine and
     * the empty-file path must stay byte-compatible in the same directory).
     */
-  private[graft] def ledgerRows(spark: SparkSession, outDir: String,
-                                basenames: Seq[String], asOf: Date,
-                                estatus: String,
-                                sink: SinkMode = SinkMode.Parquet): Unit =
+  private def ledgerRows(spark: SparkSession, outDir: String,
+                         basenames: Seq[String], asOf: Date,
+                         estatus: String,
+                         sink: SinkMode = SinkMode.Parquet): Unit =
     if (basenames.nonEmpty) {
       import spark.implicits._
       val df = basenames.toDF("nombreArchivo")

@@ -310,6 +310,9 @@ object StreamingPipeline {
     * its scaladoc for the replay protocol. Output lands under
     * `outDir/batch=<id>/` (partition-discovered as a `batch` column;
     * `spark.read.parquet(outDir)` still reads the union).
+    *
+    * Each micro-batch re-reads the parquet index: a drain-scoped cache of
+    * it as checkpointed blocks measured slower (0.80×, SURVEY.md round 20).
     */
   def dedupGateStream(docs: DataFrame, indexDir: String, outDir: String,
                       checkpointDir: String, idCol: String = "doc_id",

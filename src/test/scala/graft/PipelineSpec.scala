@@ -323,11 +323,10 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("job budget: a no-op runBatch runs the ledger read alone") {
-    val (in2, out2) = freshRun("report_a.txt" -> reportA)
-    Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-02-15"))
+    // the run-N tests above have ledgered every file of the shared fixture
     var s: Pipeline.RunSummary = null
     val jobs = jobsOf {
-      s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-02-16"))
+      s = Pipeline.runBatch(spark, inDir.toString, outDir.toString, Date.valueOf("2024-04-30"))
     }
     assert(s == Pipeline.RunSummary(0, 0, 0))
     assert(jobs.size == 1, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
