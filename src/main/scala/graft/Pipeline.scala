@@ -52,7 +52,7 @@ object JdbcReplace {
 }
 
 /** End-to-end batch assembly of the reference ETL (SURVEY.md §3, §7.1):
-  * file listing → per-file admission gate ([[Pipeline.admit]]: ledger skip,
+  * file listing → per-file admission gate ([[Pipeline.ingest]]: ledger skip,
   * layout check P16, retry horizon) → validity flags (P4-P6) → single-pass
   * valid/invalid materialization (P7/P8) → `estadisticas` (P11-P15) /
   * `visitantes` merge (A1+J1) / `errores` (G1+P1) / `bitacora` (A3).
@@ -361,7 +361,7 @@ object Pipeline {
   }
 
   /** Ledger rows for wrong-layout files: recorded as 'Fallido' so they never
-    * re-enter processing: the admission gate's quarantine ([[admit]]).
+    * re-enter processing: the admission gate's quarantine ([[ingest]]).
     */
   def quarantine(spark: SparkSession, outDir: String, basenames: Seq[String], asOf: Date,
                  sink: SinkMode = SinkMode.Parquet): Unit =
@@ -395,9 +395,10 @@ object Pipeline {
     * attempts after the first. A caller wanting the other reading (retries
     * on D+1 AND D+2, quarantine D+3) passes `horizonDays = 3`.
     * RetryHorizonSpec pins the boundary in both batch and streaming form. A file that recovers
-    * simply processes: its ledger row drops on the next rewrite. LAYOUT
+    * simply processes: its row drops in the full rewrite that follows its
+    * ledger append. LAYOUT
     * failures never enter here — a wrong header is deterministic, so
-    * retrying cannot fix it and [[admit]] quarantines those immediately;
+    * retrying cannot fix it and [[ingest]] quarantines those immediately;
     * mid-batch Spark failures stay whole-batch-rerun (the idempotent-rerun
     * contract subsumes the reference's task retry ladder).
     *
@@ -489,70 +490,72 @@ object Pipeline {
       versions.current.map(v => spark.read.schema(Merge.schema).parquet(versions.path(v)))
   }
 
-  /** The per-file admission decision of [[admit]]: the files to transform
-    * and the basenames it quarantined.
-    */
-  private[graft] final case class Admission(admitted: Seq[String], quarantined: Seq[String])
-
-  /** The per-file admission gate shared by [[runBatch]], the streaming
+  /** The per-file ETL ladder shared by [[runBatch]], the streaming
     * micro-batch and the post-drain reconcile
     * ([[graft.streaming.StreamingPipeline]]) — the reference dispatcher's
-    * per-file ladder (flows/orchestrator_flow.py:36-45), in this order:
+    * per-file fan-out (flows/orchestrator_flow.py:36-45), in this order:
     *
     *  1. files already in the bitacora ledger are dropped, so a rerun, a
     *     replayed micro-batch or a file another entry already ledgered is
     *     never merged twice;
     *  2. each remaining file's header is checked ([[checkHeader]]); a throw
     *     is a SYSTEM failure (ACL, truncation, upload race);
-    *  3. system failures go through the retry horizon
+    *  3. the files whose header passes are admitted: `rows(admitted)` goes
+    *     through [[processBatch]], which ledgers them last;
+    *  4. system failures go through the retry horizon
     *     ([[recordSystemFailures]], with the caller's `partial`);
-    *  4. LAYOUT failures (deterministic: no retry fixes a wrong header) and
-    *     files past the horizon are quarantined with a 'Fallido' row;
-    *  5. the rest is admitted.
+    *  5. LAYOUT failures (deterministic: no retry fixes a wrong header) and
+    *     files past the horizon are quarantined with a 'Fallido' row.
+    *
+    * The load runs before the retry-ledger rewrite, which drops the rows
+    * of files that read again: a recovered file keeps its retry row until
+    * its ledger row has landed. If anything in the load throws, the row
+    * survives, and the reconcile, which owns a consumed-but-excluded file
+    * only through that row, still claims the file on its next pass.
     *
     * `owns` narrows the unledgered files to those the caller is responsible
     * for; it runs after the ledger skip, so ledgered files are never opened.
-    * With nothing pending the gate returns before step 3 — a no-op rerun
+    * With nothing pending the ladder returns before step 4 — a no-op rerun
     * costs the ledger read alone — unless `prune` is set: the reconcile,
     * the streaming entry's only full-view caller, rewrites the retry ledger
     * every time, so the rows of files a micro-batch has since processed
-    * drop.
+    * drop. Returns the per-run totals; quarantined files count as processed
+    * files with no rows.
     */
-  private[graft] def admit(spark: SparkSession, outDir: String, files: Seq[String],
-                           asOf: Date, sink: SinkMode, horizonDays: Int,
-                           partial: Boolean = false, prune: Boolean = false,
-                           owns: String => Boolean = _ => true): Admission = {
+  private[graft] def ingest(spark: SparkSession, outDir: String, files: Seq[String],
+                            asOf: Date, sink: SinkMode, horizonDays: Int,
+                            partial: Boolean = false, prune: Boolean = false,
+                            owns: String => Boolean = _ => true)
+                           (rows: Seq[String] => DataFrame): RunSummary = {
     val done = processedFiles(spark, outDir, sink)
     val pending = files.filter(f => !done(baseName(f)) && owns(f))
-    if (pending.isEmpty && !prune) return Admission(Seq.empty, Seq.empty)
+    if (pending.isEmpty && !prune) return RunSummary(0, 0, 0)
     val checks = pending.map(f => f -> scala.util.Try(checkHeader(spark, f)))
+    val (admitted, layoutBad) = checks
+      .collect { case (f, scala.util.Success(c)) => (f, c) }
+      .partition(_._2.ok)
+    val loaded =
+      if (admitted.isEmpty) RunSummary(0, 0, 0)
+      else processBatch(spark, rows(admitted.map(_._1)), outDir, asOf,
+        expectedFiles = admitted.map(p => baseName(p._1)), sink = sink)
     val sysFailed = checks.collect { case (f, scala.util.Failure(e)) =>
       (baseName(f), s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
     }
     val horizon = recordSystemFailures(spark, outDir, sysFailed, asOf, horizonDays, partial)
-    val (admitted, layoutBad) = checks
-      .collect { case (f, scala.util.Success(c)) => (f, c) }
-      .partition(_._2.ok)
     val quarantined = layoutBad.map(p => baseName(p._1)) ++ horizon.expired
     quarantine(spark, outDir, quarantined, asOf, sink)
-    Admission(admitted.map(_._1), quarantined)
+    loaded.copy(files = loaded.files + quarantined.size)
   }
 
-  /** Full batch run: every listed report file through [[admit]], the
-    * admitted ones through [[processBatch]]. Returns per-run totals (the
-    * driver-visible contract the reference exposes through bitacora);
-    * quarantined files count as processed files with no rows.
+  /** Full batch run: every listed report file through [[ingest]], which
+    * reads the admitted ones with [[readReports]]. Returns per-run totals
+    * (the driver-visible contract the reference exposes through bitacora).
     */
   def runBatch(spark: SparkSession, inputDir: String, outDir: String, asOf: Date,
                sink: SinkMode = SinkMode.Parquet,
-               retryHorizonDays: Int = 2): RunSummary = {
-    val gate = admit(spark, outDir, listReports(spark, inputDir), asOf, sink, retryHorizonDays)
-    val quarantined = gate.quarantined.size.toLong
-    if (gate.admitted.isEmpty) return RunSummary(quarantined, 0, 0)
-    val s = processBatch(spark, readReports(spark, gate.admitted), outDir, asOf,
-      expectedFiles = gate.admitted.map(baseName), sink = sink)
-    s.copy(files = s.files + quarantined)
-  }
+               retryHorizonDays: Int = 2): RunSummary =
+    ingest(spark, outDir, listReports(spark, inputDir), asOf, sink, retryHorizonDays)(
+      readReports(spark, _))
 
   /** Transform + load for one batch of tagged raw rows — the shared core of
     * the batch driver above and [[graft.streaming.StreamingPipeline]]'s

@@ -26,7 +26,7 @@ final case class OpenSession(startMs: Long, lastMs: Long, n: Long)
   * stop" semantics as the daily batch — one code path for both scheduled
   * batch and continuous tailing.
   *
-  * Each micro-batch reuses the batch's admission gate ([[Pipeline.admit]],
+  * Each micro-batch reuses the batch's per-file ladder ([[Pipeline.ingest]],
   * which also skips files the bitacora ledger holds) and
   * [[Pipeline.processBatch]] verbatim, so batch and streaming runs are
   * observably identical per file set.
@@ -49,8 +49,8 @@ object StreamingPipeline {
     * `checkpointDir` carries processed-file state across restarts.
     *
     * Each micro-batch's file set is recovered via `input_file_name()` and
-    * passed through the same per-file admission gate as
-    * [[Pipeline.runBatch]] ([[Pipeline.admit]]):
+    * passed through the same per-file ladder as
+    * [[Pipeline.runBatch]] ([[Pipeline.ingest]]):
     *  - files already in the bitacora ledger are skipped. A micro-batch that
     *    Spark replays because it crashed after the ledger append and before
     *    its commit-log entry is a no-op, and so is a file `runBatch` already
@@ -85,68 +85,55 @@ object StreamingPipeline {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val files = batch.select(input_file_name().as("f")).distinct()
           .collect().map(_.getString(0)).toSeq
-        val admitted = Pipeline.admit(spark, outDir, files, asOf, sink, horizonDays,
-          partial = true).admitted
-        if (admitted.nonEmpty) {
-          val admittedBatch =
+        Pipeline.ingest(spark, outDir, files, asOf, sink, horizonDays, partial = true) {
+          admitted =>
             if (admitted.size == files.size) batch
             else batch.filter(input_file_name().isin(admitted: _*))
-          Pipeline.processBatch(spark, admittedBatch, outDir, asOf,
-            expectedFiles = admitted.map(Pipeline.baseName), sink = sink)
         }
         ()
       }
       .start()
 
   /** Post-drain reconciliation: the pending (listed, not yet ledgered) files
-    * the stream itself cannot deliver, run through the same admission gate
-    * ([[Pipeline.admit]]) and [[Pipeline.processBatch]] as the batch driver.
-    * It owns three classes:
+    * the stream itself cannot deliver, run through the same per-file ladder
+    * ([[Pipeline.ingest]]) as the batch driver. It owns three classes:
     *
     *  - ZERO-ROW files: a header-only file emits no rows, so it is
     *    invisible to `foreachBatch` (whose file set derives from
-    *    `input_file_name()` over data rows). The gate quarantines a bad
+    *    `input_file_name()` over data rows). The ladder quarantines a bad
     *    header; `processBatch` ledgers a good one 'Completado' 0/0.
     *  - SYSTEM-FAILING files (open throws — broken ACL, truncated upload,
     *    a directory wearing a report name): the file source never delivers
     *    them, so without this pass they would silently never surface. The
-    *    gate's retry horizon (README.md:110-115) retries them while it
-    *    holds — on recovery the source delivers them on the next drain —
-    *    and quarantines them 'Fallido' once it passes.
-    *  - CONSUMED-BUT-EXCLUDED files: the micro-batch gate hit a system
-    *    failure after the source had already delivered the rows. The
-    *    checkpoint will never redeliver them, so a pending data file that
-    *    carries a retry-ledger row is processed here once it reads again.
+    *    retry horizon (README.md:110-115) retries them while it holds — on
+    *    recovery the source delivers them on the next drain — and
+    *    quarantines them 'Fallido' once it passes.
+    *  - CONSUMED-BUT-EXCLUDED files: the micro-batch's header check hit a
+    *    system failure after the source had already delivered the rows.
+    *    The checkpoint will never redeliver them, so a pending data file
+    *    that carries a retry-ledger row is processed here once it reads
+    *    again. The ladder loads it before it rewrites the retry ledger, so
+    *    the row, and this pass's claim on the file, outlive any failure
+    *    before its ledger append.
     *
     * Pending data files with NO retry row are left alone (they belong to
-    * the stream — e.g. a file that arrived after the drain). The gate
-    * rewrites the retry ledger before `processBatch` runs, so a crash in
-    * between drops a recovered consumed-but-excluded file's retry row, and
-    * with it this pass's claim on the file: `runBatch` over the same input
-    * still picks it up. Single-writer assumption as elsewhere; every step
-    * is idempotent (re-runs converge).
+    * the stream — e.g. a file that arrived after the drain). Single-writer
+    * assumption as elsewhere; every step is idempotent (re-runs converge).
     */
   def reconcilePendingFiles(spark: SparkSession, inputDir: String,
                             outDir: String, asOf: Date,
                             sink: SinkMode = SinkMode.Parquet,
                             horizonDays: Int = 2): Unit = {
-    // read before the gate rewrites the retry ledger: a recovered file's
-    // row is pruned by that rewrite, and it is exactly the signal that the
-    // file was consumed-and-excluded rather than fresh
-    lazy val retryListed: Set[String] = {
-      val retryDir = s"$outDir/reintentos"
+    val retryDir = s"$outDir/reintentos"
+    val retryListed: Set[String] =
       if (!Pipeline.exists(spark, retryDir)) Set.empty
       else spark.read.parquet(retryDir)
         .select("nombreArchivo").collect().map(_.getString(0)).toSet
-    }
     def owns(f: String): Boolean =
       retryListed(Pipeline.baseName(f)) ||
         scala.util.Try(Pipeline.isHeaderOnly(spark, f)).getOrElse(true)
-    val admitted = Pipeline.admit(spark, outDir, Pipeline.listReports(spark, inputDir),
-      asOf, sink, horizonDays, prune = true, owns = owns).admitted
-    if (admitted.nonEmpty)
-      Pipeline.processBatch(spark, Pipeline.readReports(spark, admitted), outDir, asOf,
-        expectedFiles = admitted.map(Pipeline.baseName), sink = sink)
+    Pipeline.ingest(spark, outDir, Pipeline.listReports(spark, inputDir), asOf, sink,
+      horizonDays, prune = true, owns = owns)(Pipeline.readReports(spark, _))
   }
 
   /** Streaming sessionization with CUSTOM state — the charter's

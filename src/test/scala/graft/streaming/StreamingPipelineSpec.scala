@@ -166,6 +166,35 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(etlState(bOut) == before)
   }
 
+  test("a consumed-but-excluded file whose reconcile load fails is still claimed by the next reconcile") {
+    val xIn = Files.createTempDirectory("st_excluded_in")
+    val xOut = Files.createTempDirectory("st_excluded_out")
+    writeReplayReport(xIn)
+    // the state a micro-batch leaves when the source delivered the file but
+    // its header check threw: a retry row, and no redelivery by the stream
+    Pipeline.recordSystemFailures(spark, xOut.toString,
+      Seq(("report_r1.txt", "IOException: simulated")), Date.valueOf("2024-02-15"),
+      partial = true)
+    // a plain file where the visitantes versions dir belongs: processBatch
+    // throws at the version write, before its ledger append
+    val blocker = xOut.resolve("visitantes")
+    Files.write(blocker, Array.emptyByteArray)
+    intercept[Exception](StreamingPipeline.reconcilePendingFiles(
+      spark, xIn.toString, xOut.toString, Date.valueOf("2024-02-16")))
+    assert(!Files.exists(xOut.resolve("bitacora")))
+    val retryRows = spark.read.parquet(s"$xOut/reintentos")
+      .collect().map(_.getString(0)).toSeq
+    assert(retryRows == Seq("report_r1.txt"), s"retry rows after the failed load: $retryRows")
+
+    Files.delete(blocker)
+    StreamingPipeline.reconcilePendingFiles(
+      spark, xIn.toString, xOut.toString, Date.valueOf("2024-02-16"))
+    val (visits, keys, ledgerRows, _) = etlState(xOut)
+    assert(visits == 2 && keys == Set("alice@example.com", "bob@example.com") &&
+      ledgerRows == 1, s"after the second reconcile: ${etlState(xOut)}")
+    assert(spark.read.parquet(s"$xOut/reintentos").count() == 0)
+  }
+
   test("streaming dedup gate: persisted index drops corpus dups, self dups, and CROSS-BATCH dups") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.Dedup
