@@ -14,96 +14,55 @@ import graft.functions.{BloomMightContain, DotF32, LevBounded, MisraGries, PqAdc
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"dot_f32 requires exactly 2 arguments, got ${children.size}")
-        DotF32(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("lev_bounded"),
-      new ExpressionInfo(classOf[LevBounded].getName, "lev_bounded"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"lev_bounded requires exactly 3 arguments, got ${children.size}")
-        val k = children(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"lev_bounded threshold must be an INT literal, got $other")
-        }
-        LevBounded(children.head, children(1), k)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("topk_struct"),
-      new ExpressionInfo(classOf[TopKStruct].getName, "topk_struct"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          s"topk_struct requires exactly 3 arguments (key, payload, k), got ${children.size}")
-        val k = children(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"topk_struct k must be an INT literal, got $other")
-        }
-        TopKStruct(children.head, children(1), k)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("mg_sketch"),
-      new ExpressionInfo(classOf[MisraGries].getName, "mg_sketch"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"mg_sketch requires exactly 2 arguments (item, k), got ${children.size}")
-        val k = children(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"mg_sketch k must be an INT literal, got $other")
-        }
-        MisraGries(children.head, k)
-      }))
-    // PQ codec pair ([[graft.functions.PqEncode]]/[[PqTables]]): args are
-    // (embedding, flat codebooks literal, m, ksub) with m/ksub INT literals.
-    def intLit(e: Expression, what: String): Int = e match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an INT literal, got $other")
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((
+        new FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name),
+        (children: Seq[Expression]) => {
+          require(children.size == f.arity, s"${f.name} requires ${f.usage}, got ${children.size}")
+          f.build(children)
+        }))
     }
-    ext.injectFunction((
-      new FunctionIdentifier("pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "pq_encode"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          s"pq_encode requires 4 arguments (emb, books, m, ksub), got ${children.size}")
-        PqEncode(children.head, children(1),
-          intLit(children(2), "pq_encode m"), intLit(children(3), "pq_encode ksub"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("pq_tables"),
-      new ExpressionInfo(classOf[PqTables].getName, "pq_tables"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          s"pq_tables requires 4 arguments (emb, books, m, ksub), got ${children.size}")
-        PqTables(children.head, children(1),
-          intLit(children(2), "pq_tables m"), intLit(children(3), "pq_tables ksub"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("pq_adc_score"),
-      new ExpressionInfo(classOf[PqAdcScore].getName, "pq_adc_score"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"pq_adc_score requires 2 arguments (codes, tables), got ${children.size}")
-        PqAdcScore(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"bloom_might_contain requires 2 arguments (value, filterBytes), got ${children.size}")
-        BloomMightContain(children.head, children(1))
-      }))
     // HOF-form dot products (user-written or Vectors.dotHof) compile down
     // to the native expression automatically.
     ext.injectOptimizerRule(_ => VectorizeDotProduct)
   }
+}
+
+object GraftExtensions {
+
+  /** One SQL function: name, expression class, arity, the arity phrase of
+    * its error message, and the builder, called with exactly `arity`
+    * children.
+    */
+  private final case class Fn(name: String, cls: Class[_], arity: Int, usage: String,
+                              build: Seq[Expression] => Expression)
+
+  /** An argument the expression is built with (a size or threshold), which
+    * must therefore be an INT literal.
+    */
+  private def intLit(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an INT literal, got $other")
+  }
+
+  private val functions = Seq(
+    Fn("dot_f32", classOf[DotF32], 2, "exactly 2 arguments", c => DotF32(c(0), c(1))),
+    Fn("lev_bounded", classOf[LevBounded], 3, "exactly 3 arguments",
+      c => LevBounded(c(0), c(1), intLit(c(2), "lev_bounded threshold"))),
+    Fn("topk_struct", classOf[TopKStruct], 3, "exactly 3 arguments (key, payload, k)",
+      c => TopKStruct(c(0), c(1), intLit(c(2), "topk_struct k"))),
+    Fn("mg_sketch", classOf[MisraGries], 2, "exactly 2 arguments (item, k)",
+      c => MisraGries(c(0), intLit(c(1), "mg_sketch k"))),
+    // PQ codec ([[graft.functions.PqEncode]]/[[PqTables]]): (embedding,
+    // flat codebooks literal, m, ksub)
+    Fn("pq_encode", classOf[PqEncode], 4, "4 arguments (emb, books, m, ksub)",
+      c => PqEncode(c(0), c(1), intLit(c(2), "pq_encode m"), intLit(c(3), "pq_encode ksub"))),
+    Fn("pq_tables", classOf[PqTables], 4, "4 arguments (emb, books, m, ksub)",
+      c => PqTables(c(0), c(1), intLit(c(2), "pq_tables m"), intLit(c(3), "pq_tables ksub"))),
+    Fn("pq_adc_score", classOf[PqAdcScore], 2, "2 arguments (codes, tables)",
+      c => PqAdcScore(c(0), c(1))),
+    Fn("bloom_might_contain", classOf[BloomMightContain], 2,
+      "2 arguments (value, filterBytes)", c => BloomMightContain(c(0), c(1))))
 }
