@@ -1,10 +1,10 @@
 package graft
 
 import java.sql.{Date, DriverManager}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DateType, LongType, StringType, StructField, StructType}
-import graft.operators.{Layout, Materialize, Merge, Prepare, Validate}
+import org.apache.spark.sql.types.{DateType, LongType, StringType, StructField, StructType}
+import graft.operators.{Checkpoints, Layout, Materialize, Merge, Prepare, Validate}
 
 /** Where the pipeline's four relations (estadisticas, errores, visitantes,
   * bitacora) are materialized and read back from.
@@ -63,10 +63,10 @@ object JdbcReplace {
   * observable outputs, arbitrarily many files per run.
   *
   * Scale design (100 TB framing):
-  *  - ONE scan of the input CSVs: the flagged frame is materialized to
-  *    parquet partitioned by `is_valid`, so the valid/invalid split and every
-  *    downstream consumer read partition-pruned parquet instead of re-parsing
-  *    CSV (the reference parses once but holds everything in RAM; a naive
+  *  - ONE scan of the input CSVs: the flagged frame is materialized once
+  *    and released when the batch ends; the split, both sinks, the
+  *    visitantes delta and the bitacora read it instead of re-parsing CSV
+  *    (the reference parses once but holds everything in RAM; a naive
   *    two-filter Spark plan would scan the CSV twice).
   *  - `estadisticas`/`errores` are written partitioned by `nombreArchivo`
   *    with dynamic partition overwrite → re-running a file replaces exactly
@@ -93,7 +93,18 @@ object Pipeline {
       .option("header", "true")
       .schema(Layout.rawSchema)
       .csv(files: _*)
-      .withColumn("nombreArchivo", element_at(split(input_file_name(), "/"), -1))
+      .withColumn("nombreArchivo", fileName)
+
+  /** `nombreArchivo`, the ledgers' key, for the batch and streaming reads:
+    * `input_file_name()` is a percent-encoded URI, decoded by URI rules (a
+    * literal `+` is escaped first, or `url_decode` would make it a space).
+    */
+  private[graft] def fileName: Column =
+    url_decode(regexp_replace(element_at(split(input_file_name(), "/"), -1), "\\+", "%2B"))
+
+  /** An `input_file_name()` URI decoded to a path [[checkHeader]] can open. */
+  private[graft] def decodedPath(uri: String): String =
+    new org.apache.hadoop.fs.Path(new java.net.URI(uri)).toString
 
   /** S1: driver-side file listing (metadata only — never a data scan). */
   def listReports(spark: SparkSession, inputDir: String): Seq[String] = {
@@ -575,115 +586,99 @@ object Pipeline {
     val layout = Validate.checkLayout(raw.drop("nombreArchivo"))
     require(layout.ok, s"layout check failed, missing columns: ${layout.missing.mkString(", ")}")
 
-    // P4-P8: flag + single-pass materialized split. The scratch dir must be
-    // truncated WHOLE (static overwrite): under the session's dynamic
-    // partition-overwrite mode, a batch with no invalid rows would leave the
-    // previous run's is_valid=false partition in place and resurrect its
-    // rows into this batch.
-    val staged = s"$outDir/_staged"
-    val withFlags = Validate.withValidityFlags(raw)
-    withFlags.write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("is_valid").parquet(staged)
-    // All-empty batch (every expected file was header-only): the write left
-    // no is_valid= partition dir, so there is nothing to transform — just
-    // ledger the files.
-    if (!Seq(true, false).exists(v => exists(spark, s"$staged/is_valid=$v"))) {
-      emptyFileLedger(spark, outDir, expectedFiles, asOf, sink)
-      return RunSummary(expectedFiles.size.toLong, 0, 0)
-    }
-    // Read back with the schema it was written with: the partition column
-    // moves last and keeps its BOOLEAN type, and no inference job runs.
-    val stagedSchema = StructType(
-      withFlags.schema.filterNot(_.name == "is_valid") :+ StructField("is_valid", BooleanType))
-    val flagged = spark.read.schema(stagedSchema).parquet(staged)
-    val (ok, err) = Validate.split(flagged)
-
-    // estadisticas: P11→P2→P12-15, reference column order. Parquet mode
-    // writes per-file partitions (idempotent rerun = partition replace);
-    // JDBC mode mirrors the reference's SQLAlchemy append loader
-    // (utils/utils_load.py:24-31 — rerun-safety comes from the ledger gate,
-    // which never re-admits a processed file).
-    val prepared = Prepare.dropFlags(Prepare.prepare(ok))
-    val estadisticas = Prepare.estadisticas(prepared, col("nombreArchivo"))
-    // errores: G1 explode + P1 projection.
-    val exploded = Prepare.errores(Prepare.explodeErrors(err), col("nombreArchivo"))
-    sink match {
-      case m: SinkMode.Jdbc =>
-        writeJdbc(estadisticas, m, "estadisticas", "append")
-        writeJdbc(exploded, m, "errores", "append")
-      case SinkMode.Parquet =>
-        estadisticas.write.mode("overwrite").partitionBy("nombreArchivo")
-          .parquet(s"$outDir/estadisticas")
-        exploded.write.mode("overwrite").partitionBy("nombreArchivo")
-          .parquet(s"$outDir/errores")
-    }
-
-    // visitantes: A1 delta + J1 merge, then the mode's replace protocol —
-    // a new version published behind the atomic pointer on parquet, staging
-    // table + RENAME swap on JDBC. The delta is aggregated once: the merge,
-    // the touched-key semi-join and the SCD batch all read the checkpoint.
-    val delta = Materialize.frame(Prepare.visitantes(prepared))
-    val merged = currentVisitantes(spark, outDir, sink)
-      .map(target => Merge.mergeVisitantes(target, delta, asOf))
-      .getOrElse(delta)
-      .select(Merge.allCols.map(col): _*)
-    sink match {
-      case m: SinkMode.Jdbc => m.replace match {
-        case JdbcReplace.StagingSwap => jdbcReplaceVisitantes(merged, m)
-        case JdbcReplace.Upsert => jdbcUpsertVisitantes(merged, m)
+    // P4-P8: flag once, materialize once (one CSV scan); every consumer
+    // reads the checkpoint, and every checkpoint is released on the way out.
+    val flagged = Materialize.frame(Validate.withValidityFlags(raw))
+    try {
+      // bitacora: ONE aggregate over the flags, one row per file, collected
+      // first (it serves the append, the seen-set and the totals) and
+      // appended last. No rows: every expected file was header-only.
+      val bit = Prepare.bitacoraFromFlags(flagged).withColumn("fechaProceso", lit(asOf))
+      val rows = bit.collect()
+      if (rows.isEmpty) {
+        emptyFileLedger(spark, outDir, expectedFiles, asOf, sink)
+        return RunSummary(expectedFiles.size.toLong, 0, 0)
       }
-      case SinkMode.Parquet =>
-        val versions = visitantesVersions(spark, outDir)
-        val next = versions.current.fold(1L)(_ + 1)
-        val versionDir = versions.path(next)
-        merged.write.mode("overwrite").parquet(versionDir)
-        versions.publish(next)
-        // SCD-2 history of the visitantes dimension (SURVEY §2.5 rollover
-        // semantics, kept queryable by time): this batch's updates are the
-        // merged states of the keys the batch touched, effective asOf. The
-        // closed extent under visitantes_scd/closed only ever appends —
-        // existing files stay byte-untouched (the Scd.applyBatchDelta write
-        // path at Pipeline level; cold history never rewrites). Rebased on
-        // the JUST-WRITTEN version dir, not `merged`, whose lazy plan would
-        // re-run the merge. JDBC mode keeps the reference's Type-1 table
-        // only: an operational DB's dimension history is the warehouse's
-        // job, not the OLTP sink's. This hook sits INSIDE the documented
-        // pointer-swap-to-ledger-append crash window (README "Rerun
-        // idempotence"): the SCD history inherits the ledger-gate rerun
-        // contract — a rerun after a crash here re-merges the delta and the
-        // history closes the pre-crash state with the re-merged state on
-        // top; recovery is restoring the retained prior visitantes version
-        // before rerunning.
-        val touched = spark.read.schema(Merge.schema).parquet(versionDir)
-          .join(delta.select("email"), Seq("email"), "left_semi")
-          .withColumn("_eff", lit(asOf))
-        operators.Scd.applyBatchDeltaDirs(spark,
-          s"$outDir/visitantes_scd/open", s"$outDir/visitantes_scd/closed",
-          touched, "email", Merge.allCols.filterNot(_ == "email"), "_eff")
-    }
+      val (ok, err) = Validate.split(flagged)
 
-    // bitacora: the per-file ledger, appended last, from ONE aggregate over
-    // the staged flags (one scan, one shuffle; no split, explode or join).
-    // Files the caller expected but that produced zero rows (header-only
-    // inputs) still get a ledger row — otherwise they are never marked
-    // processed and re-enter every run. One collect serves the append, the
-    // seen-set and the totals: the frame is one row per file.
-    val bit = Prepare.bitacoraFromFlags(flagged).withColumn("fechaProceso", lit(asOf))
-    val rows = bit.collect()
-    val collected = spark.createDataFrame(java.util.Arrays.asList(rows: _*), bit.schema)
-    sink match {
-      case m: SinkMode.Jdbc =>
-        writeJdbc(collected, m, "bitacora", "append")
-      case SinkMode.Parquet =>
-        collected.write.mode("append").parquet(s"$outDir/bitacora")
-    }
-    val name = bit.schema.fieldIndex("nombreArchivo")
-    val oks = bit.schema.fieldIndex("registrosExitosos")
-    val errs = bit.schema.fieldIndex("registrosFallidos")
-    val seen = rows.map(_.getString(name)).toSet
-    emptyFileLedger(spark, outDir, expectedFiles.filterNot(seen), asOf, sink)
-    RunSummary(seen.size.toLong + expectedFiles.count(!seen(_)),
-      rows.map(_.getLong(oks)).sum, rows.map(_.getLong(errs)).sum)
+      // estadisticas: P11→P2→P12-15, reference column order. Parquet mode
+      // writes per-file partitions (idempotent rerun = partition replace);
+      // JDBC mode mirrors the reference's SQLAlchemy append loader
+      // (utils/utils_load.py:24-31 — rerun-safety comes from the ledger gate,
+      // which never re-admits a processed file).
+      val prepared = Prepare.dropFlags(Prepare.prepare(ok))
+      val estadisticas = Prepare.estadisticas(prepared, col("nombreArchivo"))
+      // errores: G1 explode + P1 projection.
+      val exploded = Prepare.errores(Prepare.explodeErrors(err), col("nombreArchivo"))
+      sink match {
+        case m: SinkMode.Jdbc =>
+          writeJdbc(estadisticas, m, "estadisticas", "append")
+          writeJdbc(exploded, m, "errores", "append")
+        case SinkMode.Parquet =>
+          estadisticas.write.mode("overwrite").partitionBy("nombreArchivo")
+            .parquet(s"$outDir/estadisticas")
+          exploded.write.mode("overwrite").partitionBy("nombreArchivo")
+            .parquet(s"$outDir/errores")
+      }
+
+      // visitantes: A1 delta + J1 merge, then the mode's replace protocol —
+      // a new version published behind the atomic pointer on parquet, staging
+      // table + RENAME swap on JDBC. The delta is aggregated once: the merge,
+      // the touched-key semi-join and the SCD batch all read the checkpoint.
+      val delta = Materialize.frame(Prepare.visitantes(prepared))
+      try {
+        val merged = currentVisitantes(spark, outDir, sink)
+          .map(target => Merge.mergeVisitantes(target, delta, asOf))
+          .getOrElse(delta)
+          .select(Merge.allCols.map(col): _*)
+        sink match {
+          case m: SinkMode.Jdbc => m.replace match {
+            case JdbcReplace.StagingSwap => jdbcReplaceVisitantes(merged, m)
+            case JdbcReplace.Upsert => jdbcUpsertVisitantes(merged, m)
+          }
+          case SinkMode.Parquet =>
+            val versions = visitantesVersions(spark, outDir)
+            val next = versions.current.fold(1L)(_ + 1)
+            val versionDir = versions.path(next)
+            merged.write.mode("overwrite").parquet(versionDir)
+            versions.publish(next)
+            // SCD-2 history of the visitantes dimension (SURVEY §2.5 rollover
+            // semantics, kept queryable by time): the merged states of the
+            // keys this batch touched, effective asOf, read back from the
+            // JUST-WRITTEN version dir (`merged`'s lazy plan would re-run the
+            // merge). The closed extent under visitantes_scd/closed only
+            // appends; cold history never rewrites. JDBC mode keeps the
+            // reference's Type-1 table only: an operational DB's dimension
+            // history is the warehouse's job. This hook sits INSIDE the
+            // pointer-swap-to-ledger-append crash window (README "Rerun
+            // idempotence"): a rerun after a crash here re-merges the delta,
+            // and the history closes the pre-crash state with the re-merged
+            // state on top; recovery is restoring the retained prior
+            // visitantes version before rerunning.
+            val touched = spark.read.schema(Merge.schema).parquet(versionDir)
+              .join(delta.select("email"), Seq("email"), "left_semi")
+              .withColumn("_eff", lit(asOf))
+            operators.Scd.applyBatchDeltaDirs(spark,
+              s"$outDir/visitantes_scd/open", s"$outDir/visitantes_scd/closed",
+              touched, "email", Merge.allCols.filterNot(_ == "email"), "_eff")
+        }
+      } finally Checkpoints.drop(delta)
+
+      // Expected files that produced zero rows (header-only inputs) still get
+      // a ledger row; otherwise they re-enter every run.
+      val collected = spark.createDataFrame(java.util.Arrays.asList(rows: _*), bit.schema)
+      sink match {
+        case m: SinkMode.Jdbc =>
+          writeJdbc(collected, m, "bitacora", "append")
+        case SinkMode.Parquet =>
+          collected.write.mode("append").parquet(s"$outDir/bitacora")
+      }
+      val seen = rows.map(_.getAs[String]("nombreArchivo")).toSet
+      emptyFileLedger(spark, outDir, expectedFiles.filterNot(seen), asOf, sink)
+      RunSummary(seen.size.toLong + expectedFiles.count(!seen(_)),
+        rows.map(_.getAs[Long]("registrosExitosos")).sum,
+        rows.map(_.getAs[Long]("registrosFallidos")).sum)
+    } finally Checkpoints.drop(flagged)
   }
 
   /** 'Completado' (0/0) ledger rows for expected files that contributed no

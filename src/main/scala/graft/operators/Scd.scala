@@ -246,6 +246,6 @@ object Scd {
       if (fs.exists(p)) spark.read.schema(schema).parquet(openDir)
       else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     val delta = applyBatchDelta(dim, updates, key, attrs, effCol, validFrom, validTo)
-    writeDelta(delta, closedDir, openDir)
+    try writeDelta(delta, closedDir, openDir) finally Checkpoints.drop(delta.changes)
   }
 }

@@ -58,10 +58,10 @@ object Validate {
 
   /** P7/P8: one-pass split into (valid, invalid). Both frames retain the
     * validity flags (the error expansion needs them); callers drop them via
-    * [[Prepare.dropFlags]]. The parent is NOT cached here — at 100 TB caching
-    * the full scan is worse than two pruned scans; [[graft.Pipeline.runBatch]]
-    * instead materializes the flagged frame ONCE, partitioned by `is_valid`,
-    * so both sides read partition-pruned parquet from a single source pass.
+    * [[Prepare.dropFlags]]. The parent is NOT materialized here:
+    * [[graft.Pipeline.processBatch]] materializes the flagged frame ONCE
+    * ([[Materialize.frame]]), so both sides filter that checkpoint, and the
+    * source is scanned in a single pass.
     */
   def split(flagged: DataFrame): (DataFrame, DataFrame) =
     (flagged.filter(col("is_valid")), flagged.filter(!col("is_valid")))

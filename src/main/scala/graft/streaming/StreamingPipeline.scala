@@ -42,13 +42,13 @@ object StreamingPipeline {
       .schema(Layout.rawSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.csv(inputDir)
-      .withColumn("nombreArchivo", element_at(split(input_file_name(), "/"), -1))
+      .withColumn("nombreArchivo", Pipeline.fileName)
   }
 
   /** Drain all currently-available files through the ETL, then stop.
     * `checkpointDir` carries processed-file state across restarts.
     *
-    * Each micro-batch's file set is recovered via `input_file_name()` and
+    * Each micro-batch's decoded file set ([[Pipeline.decodedPath]]) is
     * passed through the same per-file ladder as
     * [[Pipeline.runBatch]] ([[Pipeline.ingest]]):
     *  - files already in the bitacora ledger are skipped. A micro-batch that
@@ -83,12 +83,12 @@ object StreamingPipeline {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val files = batch.select(input_file_name().as("f")).distinct()
-          .collect().map(_.getString(0)).toSeq
+        val files = batch.select(input_file_name()).distinct()
+          .collect().map(r => Pipeline.decodedPath(r.getString(0))).toSeq
         Pipeline.ingest(spark, outDir, files, asOf, sink, horizonDays, partial = true) {
           admitted =>
             if (admitted.size == files.size) batch
-            else batch.filter(input_file_name().isin(admitted: _*))
+            else batch.filter(col("nombreArchivo").isin(admitted.map(Pipeline.baseName): _*))
         }
         ()
       }
@@ -118,7 +118,8 @@ object StreamingPipeline {
     *
     * Pending data files with NO retry row are left alone (they belong to
     * the stream — e.g. a file that arrived after the drain). Single-writer
-    * assumption as elsewhere; every step is idempotent (re-runs converge).
+    * assumption as elsewhere; a rerun re-merges a file caught in the
+    * visitantes publish → ledger append window (README "Rerun idempotence").
     */
   def reconcilePendingFiles(spark: SparkSession, inputDir: String,
                             outDir: String, asOf: Date,

@@ -225,14 +225,13 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     .orderBy("nombreArchivo").collect()
     .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
 
-  test("empty gate: a batch of only invalid rows stages only is_valid=false") {
+  test("empty gate: a batch of only invalid rows") {
     val (in2, out2) = freshRun("report_x.txt" -> Seq(header,
       "notanemail,z,-,-,01/02/2024 10:00,,1,0,,0,0,-,-,-,-",
       "carol@example.com,w,-,-,99/99/2024 10:00,,1,0,,0,0,-,-,-,-"))
     val s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-02-15"))
     assert(s == Pipeline.RunSummary(1, 0, 2))
-    assert(Files.exists(out2.resolve("_staged").resolve("is_valid=false")))
-    assert(!Files.exists(out2.resolve("_staged").resolve("is_valid=true")))
+    assert(!Files.exists(out2.resolve("_staged")))
     assert(ledger(out2) == Seq(("report_x.txt", 0L, 2L, "Completado con errores")))
     val err = spark.read.parquet(s"$out2/errores").select("email", "tipoError")
       .orderBy("email").collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -240,12 +239,11 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(Pipeline.currentVisitantes(spark, out2.toString).get.count() == 0)
   }
 
-  test("empty gate: a batch of only valid rows stages only is_valid=true") {
+  test("empty gate: a batch of only valid rows") {
     val (in2, out2) = freshRun("report_b.txt" -> reportB)
     val s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-03-20"))
     assert(s == Pipeline.RunSummary(1, 2, 0))
-    assert(Files.exists(out2.resolve("_staged").resolve("is_valid=true")))
-    assert(!Files.exists(out2.resolve("_staged").resolve("is_valid=false")))
+    assert(!Files.exists(out2.resolve("_staged")))
     assert(ledger(out2) == Seq(("report_b.txt", 2L, 0L, "Completado")))
     // zero error rows: the errores write leaves no file partition
     assert(!Files.exists(out2.resolve("errores").resolve("nombreArchivo=report_b.txt")))
@@ -267,6 +265,40 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     // both files are ledgered: the rerun reads neither
     assert(Pipeline.runBatch(spark, in2.toString, out2.toString,
       Date.valueOf("2024-02-16")) == Pipeline.RunSummary(0, 0, 0))
+  }
+
+  test("a report named with URL-escaped characters is ledgered once, under its own name") {
+    // input_file_name() percent-encodes the path: `%20` for the space, `%25`
+    // for the `%`; a literal `+` stays and must not decode to a space
+    val name = "report_x y+z%41.txt"
+    Files.write(inDir.resolve(name), (header +
+      "\nfrank@example.com,f,-,-,02/04/2024 09:00,,1,0,,0,0,-,-,-,-" +
+      "\nbadmail,f,-,-,02/04/2024 09:00,,1,0,,0,0,-,-,-,-").getBytes)
+    val s = Pipeline.runBatch(spark, inDir.toString, outDir.toString, Date.valueOf("2024-04-05"))
+    assert(s == Pipeline.RunSummary(1, 1, 1))
+    assert(ledger(outDir).filter(_._1.startsWith("report_x")) ==
+      Seq((name, 1L, 1L, "Completado con errores")))
+    Seq("estadisticas", "errores").foreach { t =>
+      val names = spark.read.parquet(s"$outDir/$t")
+        .filter(col("email").isin("frank@example.com", "badmail"))
+        .select("nombreArchivo").distinct().collect().map(_.getString(0)).toSeq
+      assert(names == Seq(name), s"$t: $names")
+    }
+    assert(Pipeline.runBatch(spark, inDir.toString, outDir.toString,
+      Date.valueOf("2024-04-06")) == Pipeline.RunSummary(0, 0, 0))
+  }
+
+  test("a one-file runBatch onto existing state leaves no persisted RDD behind") {
+    Files.write(inDir.resolve("report_i.txt"), (header +
+      "\nalice@example.com,x,-,-,03/04/2024 10:00,,1,0,,0,0,-,-,-,-" +
+      "\ngina@example.com,g,-,-,03/04/2024 11:00,,1,0,,0,0,-,-,-,-").getBytes)
+    var s: Pipeline.RunSummary = null
+    val left = leakedRdds {
+      s = Pipeline.runBatch(spark, inDir.toString, outDir.toString, Date.valueOf("2024-04-07"))
+    }
+    assert(s == Pipeline.RunSummary(1, 2, 0))
+    assert(left.isEmpty, s"the batch left ${left.size} persisted RDDs")
+    assert(!Files.exists(outDir.resolve("_staged")))
   }
 
   /** Descriptions of the Spark jobs `body` starts (the callers' own thread
@@ -315,10 +347,11 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
       s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-03-20"))
     }
     assert(s == Pipeline.RunSummary(1, 2, 0))
-    // 20 on this fixture: 1 ledger read, 1 staged write, 2 sink writes, 2 for
-    // the shared delta aggregate, 7 for the merge, the version write and the
-    // SCD join, 2 for the SCD counts, 2 SCD writes, 3 for the bitacora. The
-    // same increment ran 34 jobs when each consumer re-read or re-aggregated.
+    // 20 on this fixture: 1 ledger read, 1 flagged-frame checkpoint, 2 sink
+    // writes, 2 for the shared delta aggregate, 7 for the merge, the version
+    // write and the SCD join, 2 for the SCD counts, 2 SCD writes, 3 for the
+    // bitacora. The same increment ran 34 jobs when each consumer re-read or
+    // re-aggregated.
     assert(jobs.size <= 20, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
   }
 

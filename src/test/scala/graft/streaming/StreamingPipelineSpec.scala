@@ -73,6 +73,43 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
       .filter(col("nombreArchivo").startsWith("report_empty")).count() == 2)
   }
 
+  test("a one-file drain leaves no persisted RDD behind") {
+    Files.write(inDir.resolve("report_s3.txt"),
+      (header + "\nerin@example.com,e,-,-,02/04/2024 10:00,,1,0,,0,0,-,-,-,-").getBytes)
+    val left = leakedRdds {
+      StreamingPipeline.runAvailableNow(spark, inDir.toString, outDir.toString, ckDir.toString,
+        Date.valueOf("2024-04-02")).awaitTermination(120000)
+    }
+    assert(spark.read.parquet(s"$outDir/bitacora")
+      .filter(col("nombreArchivo") === "report_s3.txt").count() == 1)
+    assert(left.isEmpty, s"the drain left ${left.size} persisted RDDs")
+    assert(!Files.exists(outDir.resolve("_staged")))
+  }
+
+  test("a report named with URL-escaped characters streams under its own name") {
+    val uIn = Files.createTempDirectory("st_url_in")
+    val uOut = Files.createTempDirectory("st_url_out")
+    val uCk = Files.createTempDirectory("st_url_ck")
+    // input_file_name() percent-encodes the space and the `%`, not the `+`
+    val name = "report_s y+z%41.txt"
+    Files.write(uIn.resolve(name),
+      (header + "\nalice@example.com,x,-,-,01/02/2024 10:00,,1,0,,0,0,-,-,-,-" +
+        "\nbadmail,x,-,-,01/02/2024 10:00,,1,0,,0,0,-,-,-,-").getBytes)
+    val asOf = Date.valueOf("2024-02-15")
+    StreamingPipeline.runAvailableNow(spark, uIn.toString, uOut.toString, uCk.toString, asOf)
+      .awaitTermination(120000)
+    StreamingPipeline.reconcilePendingFiles(spark, uIn.toString, uOut.toString, asOf)
+    val vis = Pipeline.currentVisitantes(spark, uOut.toString)
+      .map(_.select("email").collect().map(_.getString(0)).toSeq)
+    assert(vis.contains(Seq("alice@example.com")), s"visitantes: $vis")
+    val bit = spark.read.parquet(s"$uOut/bitacora")
+      .select("nombreArchivo", "registrosExitosos", "registrosFallidos").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(bit == Seq((name, 1L, 1L)), s"bitacora: $bit")
+    assert(!Files.exists(uOut.resolve("reintentos")) ||
+      spark.read.parquet(s"$uOut/reintentos").count() == 0)
+  }
+
   test("streaming foreachBatch routes through the JDBC SinkMode (Derby) — sink parity with batch") {
     val jIn = Files.createTempDirectory("st_jdbc_in")
     val jCk = Files.createTempDirectory("st_jdbc_ck")
