@@ -17,10 +17,13 @@ object Checkpoints {
     * registers, so the RDD inside the frame's `LogicalRDD` is what must be
     * unpersisted. Only call once nothing will read `df` again — a consumer
     * evaluated after the drop recomputes from a missing block and fails.
+    * Blocking: the blocks are gone when the call returns, so no removal
+    * outlives it and overlaps the caller's next jobs (an ETL batch's flagged
+    * frame is the whole batch's rows).
     */
   def drop(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        lr.rdd.unpersist(blocking = true)
     }
 }
