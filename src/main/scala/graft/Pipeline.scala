@@ -4,7 +4,7 @@ import java.sql.{Date, DriverManager}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, LongType, StringType, StructField, StructType}
-import graft.operators.{Checkpoints, Layout, Materialize, Merge, Prepare, Validate}
+import graft.operators.{Layout, Materialize, Merge, Prepare, Validate}
 
 /** Where the pipeline's four relations (estadisticas, errores, visitantes,
   * bitacora) are materialized and read back from.
@@ -662,7 +662,7 @@ object Pipeline {
               s"$outDir/visitantes_scd/open", s"$outDir/visitantes_scd/closed",
               touched, "email", Merge.allCols.filterNot(_ == "email"), "_eff")
         }
-      } finally Checkpoints.drop(delta)
+      } finally Materialize.release(delta)
 
       // Expected files that produced zero rows (header-only inputs) still get
       // a ledger row; otherwise they re-enter every run.
@@ -678,7 +678,7 @@ object Pipeline {
       RunSummary(seen.size.toLong + expectedFiles.count(!seen(_)),
         rows.map(_.getAs[Long]("registrosExitosos")).sum,
         rows.map(_.getAs[Long]("registrosFallidos")).sum)
-    } finally Checkpoints.drop(flagged)
+    } finally Materialize.release(flagged)
   }
 
   /** 'Completado' (0/0) ledger rows for expected files that contributed no

@@ -116,15 +116,16 @@ object Bpe {
 
   /** Learn `nMerges` merges from a `(word, cnt)` table. Returns the merge
     * table in learned order. Driver traffic is ONE ROW per iteration (the
-    * argmax); the vocab table is localCheckpointed each iteration to keep
-    * the plan flat (same discipline as the connected-components loop —
-    * without it the replace chain re-derives from iteration 0 every pass).
+    * argmax); the vocab table is snapshotted each iteration
+    * ([[Materialize.round]]) to keep the plan flat (same discipline as the
+    * connected-components loop — without it the replace chain re-derives
+    * from iteration 0 every pass).
     * Stops early when no pair remains (fully merged vocabulary).
     */
   def trainMerges(wc: DataFrame, nMerges: Int): Seq[(String, String)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var vocab = wc.select(symbolize(col("word")).as("syms"), col("cnt").cast("long").as("cnt"))
-      .localCheckpoint()
+    var vocab = Materialize.round(
+      wc.select(symbolize(col("word")).as("syms"), col("cnt").cast("long").as("cnt")))
     val merges = Seq.newBuilder[(String, String)]
     var i = 0
     var exhausted = false
@@ -137,23 +138,20 @@ object Bpe {
         val (l, r) = (best(0).getString(0), best(0).getString(1))
         merges += ((l, r))
         // eager checkpoint truncates lineage off the OLD blocks, so the
-        // previous snapshot can be dropped immediately — without this a
+        // previous snapshot can be released immediately — without this a
         // production 32k-merge train retains 32k vocab copies in the
         // block manager (the CC loop tolerates the same retention only
         // because its round count is log n)
-        val next = vocab
-          .select(applyMerge(col("syms"), l, r).as("syms"), col("cnt"))
-          .localCheckpoint()
-        Checkpoints.drop(vocab)
+        val next = Materialize.round(
+          vocab.select(applyMerge(col("syms"), l, r).as("syms"), col("cnt")))
+        Materialize.release(vocab)
         vocab = next
       }
       i += 1
     }
     // free the FINAL snapshot too — merges.result() is driver state, so
-    // nothing reads the frame again; without this every train call leaves
-    // one vocab-sized RDD in the block manager until the ContextCleaner
-    // happens to GC it (round-15 review finding)
-    Checkpoints.drop(vocab)
+    // nothing reads the frame again
+    Materialize.release(vocab)
     merges.result()
   }
 

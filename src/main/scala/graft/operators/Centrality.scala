@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * against the static (src, dst, outdeg) edge relation — no driver-side
   * state, no collect, rank frame is |nodes| rows. Iteration count is the
   * caller's knob (fixed, small — authority scoring saturates fast); each
-  * iteration localCheckpoints the rank frame so lineage stays flat (the
-  * §6.1b CC lesson).
+  * iteration snapshots the rank frame ([[Materialize.round]]) so lineage
+  * stays flat (the §6.1b CC lesson).
   *
   * Dangling nodes (no out-edges) leak their mass — the standard simplified
   * treatment for authority SCORING (relative order is what crawl
@@ -68,18 +68,18 @@ object Centrality {
           .otherwise(coalesce(col("s"), lit(0L))))
         .select(col("id"),
           (lit(150000000L) + expr("85 * _s div 100")).as("rank"))
-        .localCheckpoint() // flat lineage per iteration (the CC lesson)
-      // release the superseded round's snapshot (leak class of Bpe r16):
-      // only in-loop checkpoints — the first input shares ids' RDD
-      prevCkpt.foreach(Checkpoints.drop)
+        .transform(Materialize.round)
+      // release the superseded round's snapshot: only in-loop checkpoints —
+      // the first input shares ids' RDD
+      prevCkpt.foreach(Materialize.release)
       prevCkpt = Some(rank)
     }
     // withDeg is never referenced by the returned frame (at iterations == 0
     // it was computed eagerly and never read) — release it unconditionally;
     // ids backs the returned frame's RDD when iterations == 0, so only its
-    // drop stays behind the guard
-    Checkpoints.drop(withDeg)
-    if (iterations > 0) Checkpoints.drop(ids) // returned checkpoint is self-contained
+    // release stays behind the guard
+    Materialize.release(withDeg)
+    if (iterations > 0) Materialize.release(ids) // returned checkpoint is self-contained
     rank
   }
 }

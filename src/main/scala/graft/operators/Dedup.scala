@@ -55,21 +55,6 @@ object Dedup {
       .select(col(idCol), Text.tokens(col(textCol)).as("toks"))
       .select(col(idCol), Text.shingles3(col("toks")).as("sh"))
 
-  /** Materialize an expensive subtree that the downstream DAG consumes more
-    * than once. Spark has no cross-branch common-subexpression elimination:
-    * the LSH pipelines reference the shingle sets from the signature branch
-    * AND both sides of the verification join, so the tokenize→shingle lambda
-    * chain would run 3x per query. The default (`localCheckpoint`) computes
-    * it once and rereads the materialized partitions (freed when the RDD is
-    * GC'd) — unlike `persist`, it does not register with the cache manager,
-    * so repeated benchmark epochs can't silently hit a stale cross-query
-    * cache. At cluster scale flip `spark.graft.materialize.mode=reliable`
-    * ([[Materialize]]) to regain the executor-loss recompute path; an
-    * explicit staging write (as `Pipeline.processBatch` does with the
-    * flagged frame) plays the same role for cross-job hand-offs.
-    */
-  private def materialize(df: DataFrame): DataFrame = Materialize.frame(df)
-
   /** MinHash signature columns: minhash_p = min over shingles of
     * xxhash64(shingle, p). One explode + one groupBy — signature computation
     * is a single shuffle keyed by doc id with map-side partial min.
@@ -114,7 +99,7 @@ object Dedup {
     // One materialized shingle-set pass feeds signatures AND verification
     // (min over the distinct set equals min over the raw bag, so signatures
     // are unchanged by deriving them from `sets`).
-    val sets = materialize(shingleArrays(df, idCol, textCol)
+    val sets = Materialize.frame(shingleArrays(df, idCol, textCol)
       .withColumn("sh", array_distinct(col("sh"))))
     val sh = sets.select(col(idCol), explode_outer(col("sh")).as("shingle"))
     val aggs = (0 until numPerms).map(p => min(xxhash64(col("shingle"), lit(p))).as(s"mh_$p"))
@@ -140,7 +125,7 @@ object Dedup {
     * per side (signature branch AND verify branch consume them).
     */
   private def portableSets(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    materialize(shingleArrays(df, idCol, textCol)
+    Materialize.frame(shingleArrays(df, idCol, textCol)
       .withColumn("sh", array_distinct(col("sh"))))
 
   /** Portable band signatures: (id, band, sig) with md5 min-hashes — the
@@ -464,7 +449,7 @@ object Dedup {
     // materialized: `global` re-aggregates perDoc and the join below reads
     // it again — without the barrier the corpus-sized window explode and
     // its first aggregation ran twice (no cross-branch CSE)
-    val perDoc = materialize(wins.groupBy(col(idCol), col("wh"))
+    val perDoc = Materialize.frame(wins.groupBy(col(idCol), col("wh"))
       .agg(count(lit(1)).as("k")))
     val global = perDoc.groupBy(col("wh")).agg(sum(col("k")).as("c"))
     perDoc.join(global, "wh")
@@ -527,7 +512,7 @@ object Dedup {
     // cross-branch CSE.
     */
   private def spanToks(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    materialize(spread(df.select(col(idCol), col(textCol)))
+    Materialize.frame(spread(df.select(col(idCol), col(textCol)))
       .select(col(idCol), Text.tokens(col(textCol)).as("toks")))
 
   /** The d11/d12 window-hash explode over a [[spanToks]] frame:
@@ -537,7 +522,7 @@ object Dedup {
     * a round-15 review finding).
     */
   private def spanWins(toks: DataFrame, idCol: String, window: Int): DataFrame =
-    materialize(toks.filter(size(col("toks")) >= window)
+    Materialize.frame(toks.filter(size(col("toks")) >= window)
       .select(col(idCol), explode(transform(
         sequence(lit(1), size(col("toks")) - window + 1),
         i => struct(i.as("p"),
@@ -904,7 +889,7 @@ object Dedup {
     // error) and silently emit zero pairs — fail fast like sibling operators
     require(lenWindow > 0, s"lenWindow must be positive, got $lenWindow")
     require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
-    val base = materialize(
+    val base = Materialize.frame(
       spread(df.select(col(blockCol).as("blk"), col(idCol), col(textCol).as("txt")))
         .withColumn("len", length(col("txt")))
         .withColumn("bk", floor(col("len") / lenWindow)))
@@ -923,7 +908,7 @@ object Dedup {
     // evaluating the DP up to 3x per candidate (measured in the plan — same
     // family as the generator double-eval in SURVEY/memory). The scored
     // frame is (blk, a, b, dist) — tiny — so the barrier costs nothing.
-    val scored = materialize(cands
+    val scored = Materialize.frame(cands
       .join(texts.select(col(idCol).as("a"), col("txt").as("ta")), "a")
       .join(texts.select(col(idCol).as("b"), col("txt").as("tb")), "b")
       .select(col("blk"), col("a"), col("b"),
@@ -964,7 +949,7 @@ object Dedup {
         s"editDistanceVerify: $missing candidate id(s) have no matching '$idCol' in docs " +
           "— id-space mismatch between the candidate pairs and the corpus")
     }
-    val scored = materialize(dedupPairs
+    val scored = Materialize.frame(dedupPairs
       .join(texts.select(col(idCol).as("a"), col("txt").as("ta")), "a")
       .join(texts.select(col(idCol).as("b"), col("txt").as("tb")), "b")
       .select(col("a"), col("b"),
@@ -1085,13 +1070,11 @@ object Dedup {
       .union(p.select(col("b").as("id")))
       .distinct()
     // canonical (hi, lo) directed edges; self-loops carry no connectivity
-    // per-round class: superseded after round 1, so it stays localCheckpoint
-    // at every deployment mode (the [[Materialize]] per-round rationale)
-    var edges = p
+    var edges = Materialize.round(p
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct().localCheckpoint()
+      .distinct())
 
     // large-star: per node u over BOTH edge orientations, m = min(Γ(u) ∪
     // {u}); emit (v, m) for every neighbor v > u. Strictly-larger neighbors
@@ -1131,7 +1114,7 @@ object Dedup {
     }
 
     // Materialize a round's frame AND reset its estimated statistics.
-    // localCheckpoint alone carries the producing plan's sizeInBytes into
+    // The checkpoint alone carries the producing plan's sizeInBytes into
     // the checkpointed relation, and a loop of joins then compounds the
     // estimate MULTIPLICATIVELY round over round — by ~12 rounds the BigInt
     // has ~10^8 bits and Catalyst spends minutes inside
@@ -1141,7 +1124,7 @@ object Dedup {
     // from the checkpointed RDD resets stats to the constant default, so
     // per-round planning stays O(plan size) at any round count.
     def checkpointFresh(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
+      val ck = Materialize.round(df)
       ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
     }
 
@@ -1241,7 +1224,7 @@ object Dedup {
     // materialize: evalInv feeds both the totals and the semi join, and
     // Spark has no cross-branch CSE — without this the eval corpus
     // tokenizes and shingles twice (the contaminationPairsBloom discipline)
-    val evalInv = materialize(shingleArrays(evalDocs, idCol, textCol)
+    val evalInv = Materialize.frame(shingleArrays(evalDocs, idCol, textCol)
       .select(col(idCol).as("eval_id"), explode(array_distinct(col("sh"))).as("shingle")))
     val trainSh = shingleArrays(train, idCol, textCol)
       .select(explode(col("sh")).as("shingle"))
@@ -1273,7 +1256,7 @@ object Dedup {
     */
   def contaminationIndexFrame(evalDocs: DataFrame, idCol: String,
                               textCol: String): DataFrame =
-    materialize(shingleArrays(evalDocs, idCol, textCol)
+    Materialize.frame(shingleArrays(evalDocs, idCol, textCol)
       .select(col(idCol).as("eval_id"), explode(array_distinct(col("sh"))).as("shingle")))
 
   /** Probe ONE training delta against the eval index: the (eval_id,
@@ -1327,7 +1310,7 @@ object Dedup {
   def contaminationGateBatch(indexDir: String, trainDelta: DataFrame,
                              idCol: String, textCol: String): Long = {
     val spark = trainDelta.sparkSession
-    val hits = materialize(contaminationProbe(
+    val hits = Materialize.frame(contaminationProbe(
       spark.read.parquet(s"$indexDir/eval_inv"), trainDelta, idCol, textCol))
     hits.write.mode("append").parquet(s"$indexDir/matched")
     hits.count()
@@ -1375,7 +1358,7 @@ object Dedup {
         .select(col(idCol).as(as),
           explode(transform(array_distinct(col("sh")), s => xxhash64(s))).as("h"))
     // benchmark-sized by contract; feeds the filter build AND the verify join
-    val evalInv = inv(evalDocs, "eval_id").localCheckpoint()
+    val evalInv = Materialize.frame(inv(evalDocs, "eval_id"))
     val bf = evalInv.stat.bloomFilter("h", math.max(1L, evalInv.count()), fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
@@ -1394,7 +1377,7 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         blockCol: String, threshold: Double): DataFrame = {
-    val sets = materialize(
+    val sets = Materialize.frame(
       spread(df.select(col(blockCol).as("blk"), col(idCol), col(textCol)))
         .select(col("blk"), col(idCol), Text.tokens(col(textCol)).as("toks"))
         .select(col("blk"), col(idCol), array_distinct(Text.shingles3(col("toks"))).as("sh")))

@@ -1,34 +1,50 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Multi-consumer frame materialization with a deployment-pluggable store
-  * (r22, VERDICT r21 item 5). The engine materializes a frame whenever the
-  * downstream DAG consumes it more than once (Spark has no cross-branch
-  * CSE) or a fixpoint loop must truncate lineage. `localCheckpoint` is the
-  * right default on local[n] and on clusters that accept the fault-tolerance
-  * trade, but it pins NON-replicated executor-local blocks with the lineage
-  * cut: on a real cluster one lost executor fails the whole query with no
-  * recompute path. Deployments that need the recompute path flip ONE conf:
+/** The one module that takes and releases checkpoints, in one of two roles:
   *
-  *   spark.graft.materialize.mode = local     (default; localCheckpoint)
-  *   spark.graft.materialize.mode = reliable  (Dataset.checkpoint to the
-  *     sparkContext checkpoint dir — set it to HDFS/object storage first)
+  *  - [[frame]]: a SHARED frame, consumed more than once downstream. Spark
+  *    has no cross-branch common-subexpression elimination, so a subtree
+  *    read by several branches (the LSH shingle sets feed the signature
+  *    branch and both verification-join sides; a gate's survivors feed the
+  *    output and the index append) would otherwise run once per consumer.
+  *    Unlike `persist`, a checkpoint does not register with the cache
+  *    manager, so a repeated benchmark epoch cannot hit a stale
+  *    cross-query cache. The store is deployment-pluggable through ONE
+  *    conf:
   *
-  * Both modes are EAGER (construction-time execution — consumers, including
+  *      spark.graft.materialize.mode = local     (default; localCheckpoint)
+  *      spark.graft.materialize.mode = reliable  (Dataset.checkpoint to the
+  *        sparkContext checkpoint dir — set it to HDFS/object storage first)
+  *
+  *    `localCheckpoint` is the right default on local[n] and on clusters
+  *    that accept the fault-tolerance trade, but it pins NON-replicated
+  *    executor-local blocks with the lineage cut: on a real cluster one
+  *    lost executor fails the whole query with no recompute path. Reliable
+  *    mode regains that path at the cost of a distributed write+read per
+  *    frame — affordable where these sites sit (each frame is consumed 2-4
+  *    times, so the write amortizes against the saved recomputes; measure
+  *    per deployment).
+  *  - [[round]]: a per-round fixpoint snapshot (connected components, BPE,
+  *    PageRank) that truncates the loop's lineage. Always `localCheckpoint`,
+  *    whatever the mode: a round is superseded within the same query, and
+  *    a reliable snapshot per round would write one corpus-sized directory
+  *    per round. An executor loss mid-fixpoint still only fails the query —
+  *    the driver retries it from the last reliable frame upstream.
+  *
+  * Both roles are EAGER (construction-time execution — consumers, including
   * plan-only ones like explain, see a materialized scan) and both freeze
-  * the producing plan's partition layout; results are identical. Reliable
-  * mode costs a distributed write+read per materialization — affordable
-  * exactly where these sites sit (each frame is consumed 2-4 times, so the
-  * write amortizes against the saved recomputes; measure per deployment).
-  * Per-round fixpoint snapshots (connected components, BPE, PageRank) stay
-  * on `localCheckpoint` REGARDLESS of mode: they are superseded within the
-  * same query, explicitly dropped ([[Checkpoints.drop]]), and reliable
-  * checkpoints are not cleaned until the context exits (or
-  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`), so reliable
-  * per-round snapshots would accumulate one corpus-sized directory per
-  * round. An executor loss mid-fixpoint still only fails the query — the
-  * driver retries the round from the last reliable frame upstream.
+  * the producing plan's partition layout; results are identical across
+  * modes.
+  *
+  * Release contract: call [[release]] on a frame ONLY once nothing reads it
+  * again — a consumer evaluated after the release recomputes from a missing
+  * block (or deleted file) and fails. An unreleased checkpoint stays pinned
+  * until the ContextCleaner happens to GC its RDD, and a reliable one's
+  * files stay on disk (Spark deletes them only under
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, after that GC).
   */
 object Materialize {
   private[graft] val ModeKey = "spark.graft.materialize.mode"
@@ -43,5 +59,25 @@ object Materialize {
       case other =>
         throw new IllegalArgumentException(
           s"$ModeKey must be 'local' or 'reliable', got '$other'")
+    }
+
+  def round(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  /** Free the checkpointed RDD(s) behind `df` (no-op on frames that read no
+    * checkpoint). `Dataset.unpersist` cannot do this: it only routes through
+    * the CacheManager, where a checkpoint never registers, so the RDD inside
+    * the frame's `LogicalRDD` is what must be unpersisted. Blocking: the
+    * blocks are gone when the call returns, so no removal outlives it and
+    * overlaps the caller's next jobs (an ETL batch's flagged frame is the
+    * whole batch's rows). A reliable checkpoint's files are deleted too;
+    * a local checkpoint names no file, so local mode makes no FS call.
+    */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }.foreach { rdd =>
+      rdd.unpersist(blocking = true)
+      rdd.getCheckpointFile.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+      }
     }
 }

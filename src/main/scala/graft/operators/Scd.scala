@@ -246,6 +246,6 @@ object Scd {
       if (fs.exists(p)) spark.read.schema(schema).parquet(openDir)
       else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     val delta = applyBatchDelta(dim, updates, key, attrs, effCol, validFrom, validTo)
-    try writeDelta(delta, closedDir, openDir) finally Checkpoints.drop(delta.changes)
+    try writeDelta(delta, closedDir, openDir) finally Materialize.release(delta.changes)
   }
 }

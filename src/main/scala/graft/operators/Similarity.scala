@@ -311,45 +311,49 @@ object Similarity {
     // would admit NOTHING and return an empty centroid frame silently; at
     // num=1 the expected sample is n/2^20 rows, above target but bounded
     val num = if (target >= n) den else math.max(1L, den * target / n)
-    val sampleDf = (if (num >= den) corpus.select(col("vec_id"), col("embedding"))
+    val sampleDf = Materialize.frame( // re-read every Lloyd iteration
+      if (num >= den) corpus.select(col("vec_id"), col("embedding"))
       else corpus.select(col("vec_id"), col("embedding"))
         .filter(pmod(xxhash64(col("vec_id")), lit(den)) < lit(num)))
-      .localCheckpoint() // re-read every Lloyd iteration
     def normalize(v: Array[Double]): Array[Double] = {
       val nn = math.sqrt(v.map(x => x * x).sum)
       if (nn == 0.0) v else v.map(_ / nn)
     }
-    var cents: Array[(Long, Array[Float])] = sampleDf
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(nCells)
-      .select("embedding").collect()
-      .map(r => normalize(r.getSeq[Float](0).map(_.toDouble).toArray).map(_.toFloat))
-      .zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    // the hash sample is statistical: an unluckily thin draw seeds fewer
-    // cells than asked — fail loudly rather than return a silently coarser
-    // quantizer (E[sample] ≥ max(target, n/2^20) makes this ~impossible,
-    // which is exactly why a silent occurrence must not pass). The guard
-    // checks the full seed count, not mere non-emptiness: 0 < rows < nCells
-    // is exactly the silent-coarsening outcome (round-14 advice).
-    require(cents.length == nCells,
-      s"kmeansCentroidsScalable: sample seeded ${cents.length} of $nCells cells " +
-        s"(n=$n, num=$num) — corpus or sample too thin for the asked cell count")
-    for (_ <- 0 until iters) {
-      val assigned = assignCells(sampleDf, cents.toSeq.toDF("cell", "cvec"))
-      val byCell = labelCentroids(assigned, "cell", "embedding", scaleBits)
-        .select(col("label"), col("pos"), col("mean_fp"))
-        .collect() // ≤ nCells×dims rows — the broadcast-bounded frame
-        .groupBy(_.getLong(0))
-      cents = cents.map { case (c, prev) =>
-        byCell.get(c) match {
-          case Some(rows) =>
-            val v = new Array[Double](prev.length)
-            rows.foreach(r => v(r.getInt(1)) = r.getLong(2) / unit)
-            (c, normalize(v).map(_.toFloat))
-          case None => (c, prev) // empty cell: keep previous centroid
+    // the returned frame is driver-built, so nothing reads the sample after
+    // the Lloyd loop; the seed-count require can throw before it
+    try {
+      var cents: Array[(Long, Array[Float])] = sampleDf
+        .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(nCells)
+        .select("embedding").collect()
+        .map(r => normalize(r.getSeq[Float](0).map(_.toDouble).toArray).map(_.toFloat))
+        .zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      // the hash sample is statistical: an unluckily thin draw seeds fewer
+      // cells than asked — fail loudly rather than return a silently coarser
+      // quantizer (E[sample] ≥ max(target, n/2^20) makes this ~impossible,
+      // which is exactly why a silent occurrence must not pass). The guard
+      // checks the full seed count, not mere non-emptiness: 0 < rows < nCells
+      // is exactly the silent-coarsening outcome (round-14 advice).
+      require(cents.length == nCells,
+        s"kmeansCentroidsScalable: sample seeded ${cents.length} of $nCells cells " +
+          s"(n=$n, num=$num) — corpus or sample too thin for the asked cell count")
+      for (_ <- 0 until iters) {
+        val assigned = assignCells(sampleDf, cents.toSeq.toDF("cell", "cvec"))
+        val byCell = labelCentroids(assigned, "cell", "embedding", scaleBits)
+          .select(col("label"), col("pos"), col("mean_fp"))
+          .collect() // ≤ nCells×dims rows — the broadcast-bounded frame
+          .groupBy(_.getLong(0))
+        cents = cents.map { case (c, prev) =>
+          byCell.get(c) match {
+            case Some(rows) =>
+              val v = new Array[Double](prev.length)
+              rows.foreach(r => v(r.getInt(1)) = r.getLong(2) / unit)
+              (c, normalize(v).map(_.toFloat))
+            case None => (c, prev) // empty cell: keep previous centroid
+          }
         }
       }
-    }
-    cents.toSeq.toDF("cell", "cvec")
+      cents.toSeq.toDF("cell", "cvec")
+    } finally Materialize.release(sampleDf)
   }
 
   /** IVF ANN core: a coarse quantizer frame (cell, cvec) assigns every

@@ -171,7 +171,7 @@ object ExtensionQueries {
     "e2d_ann_ivf" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 32)
-      val approx = Similarity.ivfTopK(q, emb, 5).localCheckpoint()
+      val approx = Materialize.frame(Similarity.ivfTopK(q, emb, 5))
       val nQ = q.agg(count(lit(1)).as("n_queries"))
       val kStats = approx.groupBy(col("a_id")).agg(count(lit(1)).as("_k"))
         .agg(coalesce(expr("bool_and(_k = 5)"), lit(false)).as("_all_k5"),
@@ -810,7 +810,7 @@ object ExtensionQueries {
     "t6_tfidf" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       // tf feeds both the document-frequency aggregate and the score join;
-      // materialize it once (no cross-branch CSE — see Dedup.materialize)
+      // materialize it once (no cross-branch CSE — see Materialize)
       val tf = docs
         .select(col("doc_id"), explode(Text.tokens(col("text"))).as("word"))
         .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
@@ -1763,7 +1763,7 @@ object ExtensionQueries {
       val approx = Pq.ivfPqTopKWithCentroids(q, chunkEmb,
         Similarity.kmeansCentroidsFromSample(s, sample, 16),
         Pq.trainFromSample(sample, m = 16, ksub = 256),
-        5, nProbe = 8, rerankFactor = 8).localCheckpoint()
+        5, nProbe = 8, rerankFactor = 8).transform(Materialize.frame)
       val nQ = q.agg(count(lit(1)).as("n_queries"))
       val nC = chunkEmb.agg(count(lit(1)).as("n_corpus"))
       val kStats = approx.groupBy(col("a_id")).agg(count(lit(1)).as("_k"))

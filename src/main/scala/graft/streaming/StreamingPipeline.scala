@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.{Pipeline, SinkMode, VersionedDir}
-import graft.operators.Layout
+import graft.operators.{Layout, Materialize}
 
 /** One finalized user session (same shape/epoch-second semantics as the
   * batch `e9b_session_windows` query, so batch and stream agree row-for-row
@@ -343,9 +343,9 @@ object StreamingPipeline {
       .select(col("b").as(idCol)).distinct()
     val selfDeduped = selfExact.join(nearSelfDrop, Seq(idCol), "left_anti")
     // survivors feed two sinks (output + index append); compute once
-    val survivors = Dedup.incrementalSurvivorsIndexed(
+    val survivors = Materialize.frame(Dedup.incrementalSurvivorsIndexed(
       indexDir, selfDeduped, idCol, textCol, threshold = threshold,
-      excludeIds = Some(selfDeduped.select(idCol))).localCheckpoint()
+      excludeIds = Some(selfDeduped.select(idCol))))
     survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_committed/batch-$batchId")
     val fs = marker.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
@@ -354,8 +354,8 @@ object StreamingPipeline {
       fs.mkdirs(marker)
     }
     // release the per-batch snapshot: a long-lived stream otherwise pins
-    // one checkpointed RDD per micro-batch (the Centrality/Bpe leak class)
-    graft.operators.Checkpoints.drop(survivors)
+    // one checkpointed RDD per micro-batch
+    Materialize.release(survivors)
   }
 
   /** Streaming SEMANTIC dedup gate — [[dedupGateStream]]'s embedding twin
@@ -394,10 +394,10 @@ object StreamingPipeline {
     import graft.operators.Similarity
     val vecs = batch.select(col("vec_id"), col("embedding"))
     // full index layout back from the gate: the append below reuses this
-    // assignment instead of re-scoring the batch against the centroids
-    val admitted = Similarity.semanticDedupIncrementalIndexedFull(
-      indexDir, vecs, threshold, excludeIds = Some(vecs.select("vec_id")))
-      .localCheckpoint() // feeds two sinks (output + index append)
+    // assignment instead of re-scoring the batch against the centroids;
+    // materialized because it feeds two sinks (output + index append)
+    val admitted = Materialize.frame(Similarity.semanticDedupIncrementalIndexedFull(
+      indexDir, vecs, threshold, excludeIds = Some(vecs.select("vec_id"))))
     admitted.select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_committed/batch-$batchId")
@@ -406,8 +406,7 @@ object StreamingPipeline {
       Similarity.appendAssignedToSemanticIndex(admitted, indexDir)
       fs.mkdirs(marker)
     }
-    // release the per-batch snapshot (the mediaGateBatch leak-class note)
-    graft.operators.Checkpoints.drop(admitted)
+    Materialize.release(admitted) // the per-batch snapshot
   }
 
   /** Streaming MEDIA near-dup gate — [[dedupGateStream]]'s multimodal twin,
@@ -453,9 +452,9 @@ object StreamingPipeline {
   def mediaGateBatch(batch: DataFrame, batchId: Long, indexDir: String,
                      outDir: String, maxDist: Int = 3,
                      quarantineDir: Option[String] = None): Unit = {
-    import graft.operators.{Checkpoints, Dedup, Multimodal}
+    import graft.operators.{Dedup, Multimodal}
     // one decode per payload; both the self-join and the cross-join read it
-    val sigs = Multimodal.dHashSigs(batch).localCheckpoint()
+    val sigs = Materialize.frame(Multimodal.dHashSigs(batch))
     // within-batch: greedy keeper — drop the higher id of each near pair
     val selfDrop = Dedup.simhashPairsFromSigs(sigs, "media_id", "dhash", maxDist, 64)
       .select(col("b").as("media_id")).distinct()
@@ -465,15 +464,15 @@ object StreamingPipeline {
     val vsIndexDrop = Dedup.simhashCrossPairs(selfKept, index, "media_id", "dhash", maxDist, 64)
       .select(col("a").as("media_id")).distinct()
     // feeds two sinks (output semi-join + index append); compute once
-    val admitted = selfKept.join(vsIndexDrop, Seq("media_id"), "left_anti")
-      .localCheckpoint()
+    val admitted = Materialize.frame(
+      selfKept.join(vsIndexDrop, Seq("media_id"), "left_anti"))
     quarantineDir.foreach { qd =>
       batch.join(sigs.select("media_id"), Seq("media_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$qd/batch=$batchId")
     }
     // admitted is eagerly checkpointed — sigs' blocks are no longer needed
-    // (the Centrality/Bpe leak class: a streaming loop pins them per batch)
-    Checkpoints.drop(sigs)
+    // (a streaming loop would otherwise pin them per batch)
+    Materialize.release(sigs)
     batch.join(admitted.select("media_id"), Seq("media_id"), "left_semi")
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_committed/batch-$batchId")
@@ -485,7 +484,7 @@ object StreamingPipeline {
       Multimodal.appendToMediaIndex(admitted, indexDir, batchId)
       fs.mkdirs(marker)
     }
-    Checkpoints.drop(admitted) // both sinks written; nothing reads it again
+    Materialize.release(admitted) // both sinks written; nothing reads it again
   }
 
   /** Streaming DECONTAMINATION monitor — the eval-suite-overlap member of

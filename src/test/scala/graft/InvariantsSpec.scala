@@ -126,6 +126,23 @@ class InvariantsSpec extends SparkSpec {
         "update the total when adding/re-minting pins")
   }
 
+  test("checkpoints are taken and released only through Materialize") {
+    // a direct checkpoint call bypasses spark.graft.materialize.mode and
+    // the release contract, so only Materialize.scala may hold one
+    val root = java.nio.file.Paths.get("src/main")
+    assume(java.nio.file.Files.isDirectory(root), "src/main not present (non-repo checkout)")
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq finally walk.close()
+    val calls = Seq(".localCheckpoint(", ".checkpoint(", "Checkpoints.")
+    val offenders = files
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Materialize.scala")
+      .flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        calls.filter(text.contains).map(c => s"$p: $c")
+      }
+    assert(offenders.isEmpty, s"checkpoint calls outside Materialize: ${offenders.mkString("; ")}")
+  }
+
   test("registry hygiene: intra-registry duplicate keys fail at construction") {
     // the cross-registry check above cannot see a key duplicated WITHIN one
     // Map literal — Scala dedupes it (last entry wins) before any spec runs,

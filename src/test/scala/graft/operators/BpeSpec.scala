@@ -150,12 +150,9 @@ class BpeSpec extends SparkSpec {
     // routes through the CacheManager) — the fix unpersists the
     // checkpointed RDD inside the LogicalRDD. Without it each of the 12
     // iterations leaves one vocab snapshot behind.
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Bpe.trainMerges(Bpe.wordCounts(docs, "text"), 12)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    // nothing may remain: the final snapshot is dropped on return too
-    // (round-15 review finding — one vocab-sized RDD per call otherwise)
-    assert(after - before == 0, s"leaked ${after - before} vocab snapshots")
+    val left = leakedRdds(Bpe.trainMerges(Bpe.wordCounts(docs, "text"), 12))
+    // nothing may remain: the final snapshot is released on return too
+    assert(left.isEmpty, s"leaked ${left.size} vocab snapshots")
   }
 
   test("hybrid trainer == distributed trainer on the learned corpus") {

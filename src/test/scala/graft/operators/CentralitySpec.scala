@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -9,6 +11,10 @@ import graft.SparkSpec
   */
 class CentralitySpec extends SparkSpec {
   import spark.implicits._
+
+  /** Ids of the checkpointed RDDs `df` reads (its `LogicalRDD`s). */
+  private def checkpointIds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
 
   test("two hand-computed iterations on a 4-edge graph") {
     // 0->1, 0->2, 1->2, 2->0; outdeg 0:2 1:1 2:1; node 9 isolated
@@ -58,25 +64,27 @@ class CentralitySpec extends SparkSpec {
     val edges = docs.select(col("id").as("src"),
       explode(array((1 to 3).map(j =>
         pmod(col("id") * (2 * j + 1) + j, lit(n))): _*)).as("dst"))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val out = Centrality.pageRankFixedPoint(edges, docs, iterations = 6)
-    out.count()
-    val after = spark.sparkContext.getPersistentRDDs.size
+    var out: DataFrame = null
+    val left = leakedRdds {
+      out = Centrality.pageRankFixedPoint(edges, docs, iterations = 6)
+      out.count()
+    }
     // only the RETURNED frame's checkpoint may remain — the 5 superseded
     // rank rounds plus withDeg/ids must all have been released
-    assert(after - before <= 1, s"leaked ${after - before} snapshots (expected <= 1)")
+    assert(left.subsetOf(checkpointIds(out)), s"leaked ${left -- checkpointIds(out)}")
   }
 
   test("iterations=0 releases the edge-degree snapshot (withDeg is never returned)") {
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val out = Centrality.pageRankFixedPoint(
-      Seq((0L, 1L), (1L, 0L)).toDF("src", "dst"),
-      Seq(0L, 1L).toDF("id"), iterations = 0)
-    out.count()
-    val after = spark.sparkContext.getPersistentRDDs.size
+    var out: DataFrame = null
+    val left = leakedRdds {
+      out = Centrality.pageRankFixedPoint(
+        Seq((0L, 1L), (1L, 0L)).toDF("src", "dst"),
+        Seq(0L, 1L).toDF("id"), iterations = 0)
+      out.count()
+    }
     // only ids may remain (it backs the returned frame's RDD); withDeg —
-    // computed eagerly, never referenced by the return — must be dropped
-    assert(after - before <= 1, s"leaked ${after - before} snapshots (expected <= 1)")
+    // computed eagerly, never referenced by the return — must be released
+    assert(left.subsetOf(checkpointIds(out)), s"leaked ${left -- checkpointIds(out)}")
     assert(out.collect().map(_.getLong(1)).toSet == Set(1000000000L))
   }
 }

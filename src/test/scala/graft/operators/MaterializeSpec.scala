@@ -1,11 +1,13 @@
 package graft.operators
 
-import graft.SparkSpec
+import java.nio.file.{Files, Path}
+import java.sql.Date
+import graft.{Pipeline, SparkSpec}
 
 /** The r22 pluggable materialization strategy: `local` (default,
   * localCheckpoint) vs `reliable` (Dataset.checkpoint to the checkpoint
   * dir). Results must be identical; reliable mode must fail loudly without
-  * a checkpoint dir.
+  * a checkpoint dir, and a released reliable frame leaves no files behind.
   */
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
@@ -49,5 +51,53 @@ class MaterializeSpec extends SparkSpec {
       withMode("bogus") { Materialize.frame(docs) }
     }
     assert(e.getMessage.contains(Materialize.ModeKey))
+  }
+
+  /** A fresh context checkpoint dir under reliable mode; `body` gets the dir. */
+  private def withReliableDir[A](body: Path => A): A = {
+    val dir = Files.createTempDirectory("mat_release")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    withMode("reliable")(body(dir))
+  }
+
+  /** The reliable checkpoint data dirs (`<dir>/<uuid>/rdd-<id>`) under `dir`. */
+  private def rddDirs(dir: Path): Seq[String] = {
+    val s = Files.walk(dir)
+    try s.filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("rdd-"))
+      .toArray.map(_.toString).toSeq
+    finally s.close()
+  }
+
+  test("reliable mode: release deletes the frame's checkpoint files") {
+    withReliableDir { dir =>
+      val f = Materialize.frame(docs)
+      assert(rddDirs(dir).nonEmpty, "reliable frame wrote no checkpoint data")
+      Materialize.release(f)
+      assert(rddDirs(dir).isEmpty, s"left after release: ${rddDirs(dir)}")
+    }
+  }
+
+  test("reliable mode: a one-file runBatch onto existing state leaves no checkpoint files") {
+    val header = Layout.validColumns.mkString(",")
+    val inDir = Files.createTempDirectory("mat_in")
+    val outDir = Files.createTempDirectory("mat_out")
+    Files.write(inDir.resolve("report_a.txt"), (header +
+      "\nalice@example.com,x,-,-,01/02/2024 10:00,,1,0,,0,0,-,-,-,-" +
+      "\nnotanemail,z,-,-,01/02/2024 10:00,,1,0,,0,0,-,-,-,-").getBytes)
+    assert(Pipeline.runBatch(spark, inDir.toString, outDir.toString,
+      Date.valueOf("2024-02-15")) == Pipeline.RunSummary(1, 1, 1))
+    Files.write(inDir.resolve("report_b.txt"), (header +
+      "\nalice@example.com,x,-,-,03/02/2024 10:00,,1,0,,0,0,-,-,-,-" +
+      "\nbob@example.com,y,-,-,03/02/2024 11:00,,1,0,,0,0,-,-,-,-").getBytes)
+    withReliableDir { dir =>
+      // the flagged frame, the visitantes delta and the SCD changes join
+      // each take a reliable checkpoint; the batch releases all three
+      assert(Pipeline.runBatch(spark, inDir.toString, outDir.toString,
+        Date.valueOf("2024-02-16")) == Pipeline.RunSummary(1, 2, 0))
+      assert(rddDirs(dir).isEmpty, s"left after runBatch: ${rddDirs(dir)}")
+    }
+    val vis = Pipeline.currentVisitantes(spark, outDir.toString).get
+      .select("email", "visitasTotales").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(vis == Map("alice@example.com" -> 2, "bob@example.com" -> 1))
   }
 }

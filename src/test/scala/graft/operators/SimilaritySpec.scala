@@ -361,10 +361,16 @@ class SimilaritySpec extends SparkSpec {
       val d = dirs(i % 3)
       (i.toLong, d.map(x => x + rnd.nextGaussian().toFloat * 0.05f))
     }.toDF("vec_id", "embedding")
-    val c1 = Similarity.kmeansCentroidsScalable(pts, 3, samplePerCell = 40, iters = 6)
-      .orderBy("cell").as[(Long, Array[Float])].collect()
-    val c2 = Similarity.kmeansCentroidsScalable(pts, 3, samplePerCell = 40, iters = 6)
-      .orderBy("cell").as[(Long, Array[Float])].collect()
+    var c1, c2: Array[(Long, Array[Float])] = null
+    val left = leakedRdds {
+      c1 = Similarity.kmeansCentroidsScalable(pts, 3, samplePerCell = 40, iters = 6)
+        .orderBy("cell").as[(Long, Array[Float])].collect()
+      c2 = Similarity.kmeansCentroidsScalable(pts, 3, samplePerCell = 40, iters = 6)
+        .orderBy("cell").as[(Long, Array[Float])].collect()
+    }
+    // the centroid frame is driver-built, so the sample checkpoint every
+    // Lloyd iteration re-reads is released before return
+    assert(left.isEmpty, s"kmeansCentroidsScalable left ${left.size} persisted RDDs")
     assert(c1.length == 3)
     assert(c1.map(_._1).toSeq == c2.map(_._1).toSeq &&
       c1.map(_._2.toSeq).toSeq == c2.map(_._2.toSeq).toSeq) // deterministic

@@ -544,26 +544,24 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     import spark.implicits._
     // the CentralitySpec/BpeSpec leak bound applied to the streaming loop:
     // a long-lived stream must not accumulate pinned RDDs per batch. Only
-    // the media gate is held to an exact 0 — its two checkpoints (sigs,
-    // admitted) are both explicitly dropped; the text/semantic gates'
-    // INTERNALS go through Dedup.materialize frames that are documented as
-    // GC-reclaimed (ContextCleaner), so their residue is timing-dependent
-    // and not a deterministic bound.
+    // the media gate is held to an empty set — its two checkpoints (sigs,
+    // admitted) are both released; the text/semantic gates' INTERNALS take
+    // Materialize.frame checkpoints that nothing releases (only the
+    // ContextCleaner reclaims them, after a GC), so they would fail it.
     val mIdx = Files.createTempDirectory("leak_m_idx").toString
     val mOut = Files.createTempDirectory("leak_m_out").toString
     Multimodal.buildMediaIndex(
       Multimodal.syntheticGridImages(Seq(0L).toDF("media_id"), "media_id"), mIdx)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    for (b <- 0 until 4) {
-      val ids = Seq(100L + 8 * b, 101L + 8 * b)
-      val media = Multimodal.syntheticGridImages(ids.toDF("media_id"), "media_id")
-        .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]]("payload"))).toSeq
-        .toDF("media_id", "payload")
-      StreamingPipeline.mediaGateBatch(media, b.toLong, mIdx, mOut)
+    val left = leakedRdds {
+      for (b <- 0 until 4) {
+        val ids = Seq(100L + 8 * b, 101L + 8 * b)
+        val media = Multimodal.syntheticGridImages(ids.toDF("media_id"), "media_id")
+          .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]]("payload"))).toSeq
+          .toDF("media_id", "payload")
+        StreamingPipeline.mediaGateBatch(media, b.toLong, mIdx, mOut)
+      }
     }
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before == 0,
-      s"media gate leaked ${after - before} snapshots across 4 micro-batches")
+    assert(left.isEmpty, s"media gate leaked ${left.size} snapshots across 4 micro-batches")
   }
 
   test("streaming media gate end-to-end: MemoryStream payloads drain through the shared index") {
