@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.{Date, DriverManager}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, LongType, StringType, StructField, StructType}
 import graft.operators.{Layout, Materialize, Merge, Prepare, Validate}
@@ -214,7 +214,9 @@ object Pipeline {
       jdbcExec(m, "DROP TABLE visitantes_old")
   }
 
-  /** [[JdbcReplace.Upsert]]: stage the merged frame, apply it with ONE
+  /** [[JdbcReplace.Upsert]]: stage the merged rows of the batch's keys
+    * ([[processBatch]] semi-joins them, so a row the batch did not touch is
+    * neither staged nor updated), apply them with ONE
     * set-based upsert statement (bulk, not row-at-a-time — the staging
     * write is a normal parallel `df.write.jdbc`, and the DB merges
     * internally). First batch (no target table yet) creates the table via
@@ -320,9 +322,7 @@ object Pipeline {
         .select("nombreArchivo").collect().map(_.getString(0)).toSet
   }
 
-  /** The bitacora ledger's schema: what [[processBatch]] and [[ledgerRows]]
-    * append, in their column order.
-    */
+  /** The bitacora ledger's schema: what [[appendLedger]] writes. */
   private val bitacoraSchema = StructType(Seq(
     StructField("nombreArchivo", StringType),
     StructField("registrosExitosos", LongType),
@@ -376,7 +376,7 @@ object Pipeline {
     */
   def quarantine(spark: SparkSession, outDir: String, basenames: Seq[String], asOf: Date,
                  sink: SinkMode = SinkMode.Parquet): Unit =
-    ledgerRows(spark, outDir, basenames, asOf, "Fallido", sink)
+    appendLedger(spark, outDir, basenames.map(noRowsLedger(_, "Fallido", asOf)), sink)
 
   /** Outcome of [[recordSystemFailures]]: `retry` stays out of bitacora (the
     * file re-enters the next run), `expired` is past the horizon and must be
@@ -581,24 +581,19 @@ object Pipeline {
     */
   def processBatch(spark: SparkSession, raw: DataFrame, outDir: String, asOf: Date,
                    expectedFiles: Seq[String] = Seq.empty,
-                   sink: SinkMode = SinkMode.Parquet): RunSummary = {
+                   sink: SinkMode = SinkMode.Parquet): RunSummary = Materialize.scoped {
     // P16: missing columns are a hard failure; extra columns flow through.
     val layout = Validate.checkLayout(raw.drop("nombreArchivo"))
     require(layout.ok, s"layout check failed, missing columns: ${layout.missing.mkString(", ")}")
 
     // P4-P8: flag once, materialize once (one CSV scan); every consumer
-    // reads the checkpoint, and every checkpoint is released on the way out.
+    // reads the checkpoint, and the scope releases every checkpoint.
     val flagged = Materialize.frame(Validate.withValidityFlags(raw))
-    try {
-      // bitacora: ONE aggregate over the flags, one row per file, collected
-      // first (it serves the append, the seen-set and the totals) and
-      // appended last. No rows: every expected file was header-only.
-      val bit = Prepare.bitacoraFromFlags(flagged).withColumn("fechaProceso", lit(asOf))
-      val rows = bit.collect()
-      if (rows.isEmpty) {
-        emptyFileLedger(spark, outDir, expectedFiles, asOf, sink)
-        return RunSummary(expectedFiles.size.toLong, 0, 0)
-      }
+    // bitacora: ONE aggregate over the flags, one row per file, collected
+    // first (it serves the ledger, the seen-set and the totals). No rows:
+    // every expected file was header-only, and only the ledger is written.
+    val rows = Prepare.bitacoraFromFlags(flagged).withColumn("fechaProceso", lit(asOf)).collect()
+    if (rows.nonEmpty) {
       val (ok, err) = Validate.split(flagged)
 
       // estadisticas: P11→P2→P12-15, reference column order. Parquet mode
@@ -626,83 +621,69 @@ object Pipeline {
       // table + RENAME swap on JDBC. The delta is aggregated once: the merge,
       // the touched-key semi-join and the SCD batch all read the checkpoint.
       val delta = Materialize.frame(Prepare.visitantes(prepared))
-      try {
-        val merged = currentVisitantes(spark, outDir, sink)
-          .map(target => Merge.mergeVisitantes(target, delta, asOf))
-          .getOrElse(delta)
-          .select(Merge.allCols.map(col): _*)
-        sink match {
-          case m: SinkMode.Jdbc => m.replace match {
-            case JdbcReplace.StagingSwap => jdbcReplaceVisitantes(merged, m)
-            case JdbcReplace.Upsert => jdbcUpsertVisitantes(merged, m)
-          }
-          case SinkMode.Parquet =>
-            val versions = visitantesVersions(spark, outDir)
-            val next = versions.current.fold(1L)(_ + 1)
-            val versionDir = versions.path(next)
-            merged.write.mode("overwrite").parquet(versionDir)
-            versions.publish(next)
-            // SCD-2 history of the visitantes dimension (SURVEY §2.5 rollover
-            // semantics, kept queryable by time): the merged states of the
-            // keys this batch touched, effective asOf, read back from the
-            // JUST-WRITTEN version dir (`merged`'s lazy plan would re-run the
-            // merge). The closed extent under visitantes_scd/closed only
-            // appends; cold history never rewrites. JDBC mode keeps the
-            // reference's Type-1 table only: an operational DB's dimension
-            // history is the warehouse's job. This hook sits INSIDE the
-            // pointer-swap-to-ledger-append crash window (README "Rerun
-            // idempotence"): a rerun after a crash here re-merges the delta,
-            // and the history closes the pre-crash state with the re-merged
-            // state on top; recovery is restoring the retained prior
-            // visitantes version before rerunning.
-            val touched = spark.read.schema(Merge.schema).parquet(versionDir)
-              .join(delta.select("email"), Seq("email"), "left_semi")
-              .withColumn("_eff", lit(asOf))
-            operators.Scd.applyBatchDeltaDirs(spark,
-              s"$outDir/visitantes_scd/open", s"$outDir/visitantes_scd/closed",
-              touched, "email", Merge.allCols.filterNot(_ == "email"), "_eff")
-        }
-      } finally Materialize.release(delta)
-
-      // Expected files that produced zero rows (header-only inputs) still get
-      // a ledger row; otherwise they re-enter every run.
-      val collected = spark.createDataFrame(java.util.Arrays.asList(rows: _*), bit.schema)
+      val merged = currentVisitantes(spark, outDir, sink)
+        .map(target => Merge.mergeVisitantes(target, delta, asOf))
+        .getOrElse(delta)
+        .select(Merge.allCols.map(col): _*)
       sink match {
-        case m: SinkMode.Jdbc =>
-          writeJdbc(collected, m, "bitacora", "append")
+        case m: SinkMode.Jdbc => m.replace match {
+          case JdbcReplace.StagingSwap => jdbcReplaceVisitantes(merged, m)
+          case JdbcReplace.Upsert =>
+            // the merge passes untouched rows through unchanged: stage only
+            // the rows of the keys this batch touched
+            jdbcUpsertVisitantes(merged.join(delta.select("email"), Seq("email"), "left_semi"), m)
+        }
         case SinkMode.Parquet =>
-          collected.write.mode("append").parquet(s"$outDir/bitacora")
+          val versions = visitantesVersions(spark, outDir)
+          val next = versions.current.fold(1L)(_ + 1)
+          val versionDir = versions.path(next)
+          merged.write.mode("overwrite").parquet(versionDir)
+          versions.publish(next)
+          // SCD-2 history of the visitantes dimension (SURVEY §2.5 rollover
+          // semantics, kept queryable by time): the merged states of the
+          // keys this batch touched, effective asOf, read back from the
+          // JUST-WRITTEN version dir (`merged`'s lazy plan would re-run the
+          // merge). The closed extent under visitantes_scd/closed only
+          // appends; cold history never rewrites. JDBC mode keeps the
+          // reference's Type-1 table only: an operational DB's dimension
+          // history is the warehouse's job. This hook sits INSIDE the
+          // pointer-swap-to-ledger-append crash window (README "Rerun
+          // idempotence"): a rerun after a crash here re-merges the delta,
+          // and the history closes the pre-crash state with the re-merged
+          // state on top; recovery is restoring the retained prior
+          // visitantes version before rerunning.
+          val touched = spark.read.schema(Merge.schema).parquet(versionDir)
+            .join(delta.select("email"), Seq("email"), "left_semi")
+            .withColumn("_eff", lit(asOf))
+          operators.Scd.applyBatchDeltaDirs(spark,
+            s"$outDir/visitantes_scd/open", s"$outDir/visitantes_scd/closed",
+            touched, "email", Merge.allCols.filterNot(_ == "email"), "_eff")
       }
-      val seen = rows.map(_.getAs[String]("nombreArchivo")).toSet
-      emptyFileLedger(spark, outDir, expectedFiles.filterNot(seen), asOf, sink)
-      RunSummary(seen.size.toLong + expectedFiles.count(!seen(_)),
-        rows.map(_.getAs[Long]("registrosExitosos")).sum,
-        rows.map(_.getAs[Long]("registrosFallidos")).sum)
-    } finally Materialize.release(flagged)
+    }
+
+    // ONE ledger append, last: the data rows plus a 'Completado' (0, 0) row
+    // for each expected file that contributed no data rows (header-only
+    // inputs), which would otherwise re-enter every run.
+    val seen = rows.map(_.getAs[String]("nombreArchivo")).toSet
+    val empty = expectedFiles.filterNot(seen)
+    appendLedger(spark, outDir, rows.toSeq ++ empty.map(noRowsLedger(_, "Completado", asOf)), sink)
+    RunSummary(seen.size.toLong + empty.size,
+      rows.map(_.getAs[Long]("registrosExitosos")).sum,
+      rows.map(_.getAs[Long]("registrosFallidos")).sum)
   }
 
-  /** 'Completado' (0/0) ledger rows for expected files that contributed no
-    * data rows — see [[processBatch]]'s `expectedFiles` contract.
-    */
-  private def emptyFileLedger(spark: SparkSession, outDir: String,
-                              basenames: Seq[String], asOf: Date,
-                              sink: SinkMode): Unit =
-    ledgerRows(spark, outDir, basenames, asOf, "Completado", sink)
+  /** A ledger row for a file that contributed no data rows. */
+  private def noRowsLedger(basename: String, estatus: String, asOf: Date): Row =
+    Row(basename, 0L, 0L, estatus, asOf)
 
-  /** Shared bitacora ledger-row writer (schema in ONE place — quarantine and
-    * the empty-file path must stay byte-compatible in the same directory).
+  /** The one bitacora writer (schema in ONE place: the data rows, the
+    * header-only files' rows and the quarantine rows stay byte-compatible
+    * in the same directory). One append per call; none for no rows.
     */
-  private def ledgerRows(spark: SparkSession, outDir: String,
-                         basenames: Seq[String], asOf: Date,
-                         estatus: String,
-                         sink: SinkMode = SinkMode.Parquet): Unit =
-    if (basenames.nonEmpty) {
-      import spark.implicits._
-      val df = basenames.toDF("nombreArchivo")
-        .withColumn("registrosExitosos", lit(0L))
-        .withColumn("registrosFallidos", lit(0L))
-        .withColumn("estatus", lit(estatus))
-        .withColumn("fechaProceso", lit(asOf))
+  private def appendLedger(spark: SparkSession, outDir: String, rows: Seq[Row],
+                           sink: SinkMode): Unit =
+    if (rows.nonEmpty) {
+      val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), bitacoraSchema)
       sink match {
         case m: SinkMode.Jdbc => writeJdbc(df, m, "bitacora", "append")
         case SinkMode.Parquet => df.write.mode("append").parquet(s"$outDir/bitacora")

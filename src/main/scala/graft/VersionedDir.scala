@@ -150,3 +150,60 @@ object VersionedDir {
     fs.delete(old, true)
   }
 }
+
+/** The committed-batch marker of an at-least-once batch sink:
+  * `<dir>/_committed/batch-<id>` (underscore-prefixed, so parquet listings
+  * of `dir` skip it). `foreachBatch` runs a micro-batch again when it
+  * crashed before its commit-log entry, so every guarded sink follows one
+  * replay protocol, in order:
+  *
+  *  1. Gate against the index EXCLUDING this batch's own ids: a crashed
+  *     attempt may already have appended them, and self-filtering on
+  *     replay is the silent-loss bug. Exclusion makes the recomputed
+  *     survivor set identical on every attempt.
+  *  2. Write the batch's output to the batch-scoped `outDir/batch=<id>`
+  *     with OVERWRITE, so a replay rewrites the same rows instead of
+  *     appending duplicates.
+  *  3. Run the non-idempotent step (the index append) through [[once]]: a
+  *     replay that finds the marker skips it. A crash between the step and
+  *     the marker runs the step again — duplicate index rows, harmless
+  *     because every index lookup is distinct or semi-join based, and the
+  *     gate result stays exact through step 1.
+  *
+  * The dedup, semantic and media gates follow all three steps; the SCD
+  * stream guards its whole batch with step 3 alone. Spark replays only the
+  * batch whose commit-log entry is missing, so markers below `id − 2` are
+  * dropped when a marker is written, and a name that is not `batch-<digits>`
+  * (a partial create, a foreign file) is skipped. The markers belong to one
+  * stream checkpoint: an index rebuild calls [[clear]], since a fresh
+  * checkpoint restarts batch ids at 0 and a stale marker would skip its step.
+  */
+object CommittedBatches {
+  private val Prefix = "batch-"
+
+  private def markers(dir: String) = new Path(dir, "_committed")
+
+  /** Run `step` unless batch `batchId` already committed it under `dir`,
+    * then write the batch's marker and drop the markers below `batchId − 2`.
+    */
+  def once(dir: String, batchId: Long, conf: Configuration)(step: => Unit): Unit = {
+    val root = markers(dir)
+    val fs = root.getFileSystem(conf)
+    val marker = new Path(root, s"$Prefix$batchId")
+    if (!fs.exists(marker)) {
+      step
+      fs.mkdirs(marker)
+      fs.listStatus(root).map(_.getPath.getName)
+        .collect { case n if n.startsWith(Prefix) => n.stripPrefix(Prefix) }
+        .flatMap(_.toLongOption)
+        .filter(_ < batchId - 2)
+        .foreach(v => fs.delete(new Path(root, s"$Prefix$v"), true))
+    }
+  }
+
+  /** Drop every marker under `dir` (an index rebuild). */
+  def clear(dir: String, conf: Configuration): Unit = {
+    val root = markers(dir)
+    root.getFileSystem(conf).delete(root, true)
+  }
+}

@@ -236,18 +236,14 @@ object Dedup {
   // costs only delta-side work plus index lookups; accepted docs are
   // APPENDED so later batches dedup against everything admitted so far.
 
-  /** Build (overwrite) the persisted index for a corpus. Also clears any
-    * `_committed` batch markers from a previous streaming gate: a rebuilt
-    * index with a FRESH stream checkpoint restarts batch ids at 0, and a
-    * stale marker would make the new batch 0 silently skip its index
-    * append ([[graft.streaming.StreamingPipeline.dedupGateBatch]] step 3).
+  /** Build (overwrite) the persisted index for a corpus. Also clears the
+    * committed-batch markers of a previous streaming gate
+    * ([[graft.CommittedBatches.clear]]).
     */
   def buildDedupIndex(corpus: DataFrame, idCol: String, textCol: String, dir: String,
                       numPerms: Int = 16, bands: Int = 8): Unit = {
     require(numPerms % bands == 0, "numPerms must divide into bands")
-    val committed = new org.apache.hadoop.fs.Path(s"$dir/_committed")
-    val fs = committed.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(committed)) fs.delete(committed, true)
+    graft.CommittedBatches.clear(dir, corpus.sparkSession.sparkContext.hadoopConfiguration)
     val sets = portableSets(corpus, idCol, textCol)
     sets.write.mode("overwrite").parquet(s"$dir/sets")
     portableBandSigs(sets, idCol, numPerms, bands)
@@ -1308,7 +1304,7 @@ object Dedup {
     * matched pairs this delta contributed (pre-dedup).
     */
   def contaminationGateBatch(indexDir: String, trainDelta: DataFrame,
-                             idCol: String, textCol: String): Long = {
+                             idCol: String, textCol: String): Long = Materialize.scoped {
     val spark = trainDelta.sparkSession
     val hits = Materialize.frame(contaminationProbe(
       spark.read.parquet(s"$indexDir/eval_inv"), trainDelta, idCol, textCol))

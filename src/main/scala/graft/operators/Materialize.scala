@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ListBuffer
+import scala.util.DynamicVariable
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one module that takes and releases checkpoints, in one of two roles:
@@ -39,17 +41,30 @@ import org.apache.spark.sql.execution.LogicalRDD
   * the producing plan's partition layout; results are identical across
   * modes.
   *
-  * Release contract: call [[release]] on a frame ONLY once nothing reads it
+  * Release contract: a checkpoint is released ONLY once nothing reads it
   * again — a consumer evaluated after the release recomputes from a missing
   * block (or deleted file) and fails. An unreleased checkpoint stays pinned
   * until the ContextCleaner happens to GC its RDD, and a reliable one's
   * files stay on disk (Spark deletes them only under
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, after that GC).
+  * A batch body runs in [[scoped]], which releases every checkpoint taken
+  * inside it, the operators' internal ones included. An explicit [[release]]
+  * is left for the two cases a scope cannot express: a loop that frees its
+  * superseded rounds, and a function that returns one of its own
+  * checkpoints.
   */
 object Materialize {
   private[graft] val ModeKey = "spark.graft.materialize.mode"
 
-  def frame(df: DataFrame): DataFrame =
+  /** The checkpoints taken in the innermost open [[scoped]] block. */
+  private val scope = new DynamicVariable[Option[ListBuffer[DataFrame]]](None)
+
+  private def taken(df: DataFrame): DataFrame = {
+    scope.value.foreach(_ += df)
+    df
+  }
+
+  def frame(df: DataFrame): DataFrame = taken(
     df.sparkSession.conf.get(ModeKey, "local") match {
       case "local" => df.localCheckpoint()
       case "reliable" =>
@@ -59,9 +74,25 @@ object Materialize {
       case other =>
         throw new IllegalArgumentException(
           s"$ModeKey must be 'local' or 'reliable', got '$other'")
-    }
+    })
 
-  def round(df: DataFrame): DataFrame = df.localCheckpoint()
+  def round(df: DataFrame): DataFrame = taken(df.localCheckpoint())
+
+  /** Run `body` and then [[release]] every [[frame]] and [[round]] this
+    * thread took while it ran, whether it returns or throws. A nested scope
+    * releases only its own checkpoints; those taken outside any scope are
+    * left alone. A `Dataset` result is refused: it would read checkpoints
+    * released on the way out.
+    */
+  def scoped[T](body: => T): T = {
+    val mine = ListBuffer.empty[DataFrame]
+    try {
+      val out = scope.withValue(Some(mine))(body)
+      require(!out.isInstanceOf[Dataset[_]],
+        "Materialize.scoped: a Dataset result would outlive its checkpoints")
+      out
+    } finally mine.foreach(release)
+  }
 
   /** Free the checkpointed RDD(s) behind `df` (no-op on frames that read no
     * checkpoint). `Dataset.unpersist` cannot do this: it only routes through

@@ -760,15 +760,13 @@ object Multimodal {
     * fresh index never skips a replayed batch's append.
     */
   def buildMediaIndex(media: DataFrame, dir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(media.sparkSession.sparkContext.hadoopConfiguration)
+    val conf = media.sparkSession.sparkContext.hadoopConfiguration
     // clear markers AND stale batch subdirs: the base write only overwrites
     // sigs/base, so a rebuild over a previously-streamed index would
     // otherwise resurrect old b<id> appends next to a fresh corpus
-    for (sub <- Seq("_committed", "sigs")) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    graft.CommittedBatches.clear(dir, conf)
+    val sigs = new org.apache.hadoop.fs.Path(s"$dir/sigs")
+    sigs.getFileSystem(conf).delete(sigs, true)
     dHashSigs(media).write.mode("overwrite").parquet(s"$dir/sigs/base")
   }
 

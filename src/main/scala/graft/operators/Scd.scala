@@ -245,7 +245,7 @@ object Scd {
     val dim =
       if (fs.exists(p)) spark.read.schema(schema).parquet(openDir)
       else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    val delta = applyBatchDelta(dim, updates, key, attrs, effCol, validFrom, validTo)
-    try writeDelta(delta, closedDir, openDir) finally Materialize.release(delta.changes)
+    Materialize.scoped(writeDelta(
+      applyBatchDelta(dim, updates, key, attrs, effCol, validFrom, validTo), closedDir, openDir))
   }
 }

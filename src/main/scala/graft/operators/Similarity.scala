@@ -311,17 +311,17 @@ object Similarity {
     // would admit NOTHING and return an empty centroid frame silently; at
     // num=1 the expected sample is n/2^20 rows, above target but bounded
     val num = if (target >= n) den else math.max(1L, den * target / n)
-    val sampleDf = Materialize.frame( // re-read every Lloyd iteration
-      if (num >= den) corpus.select(col("vec_id"), col("embedding"))
-      else corpus.select(col("vec_id"), col("embedding"))
-        .filter(pmod(xxhash64(col("vec_id")), lit(den)) < lit(num)))
     def normalize(v: Array[Double]): Array[Double] = {
       val nn = math.sqrt(v.map(x => x * x).sum)
       if (nn == 0.0) v else v.map(_ / nn)
     }
     // the returned frame is driver-built, so nothing reads the sample after
-    // the Lloyd loop; the seed-count require can throw before it
-    try {
+    // the Lloyd loop
+    Materialize.scoped {
+      val sampleDf = Materialize.frame( // re-read every Lloyd iteration
+        if (num >= den) corpus.select(col("vec_id"), col("embedding"))
+        else corpus.select(col("vec_id"), col("embedding"))
+          .filter(pmod(xxhash64(col("vec_id")), lit(den)) < lit(num)))
       var cents: Array[(Long, Array[Float])] = sampleDf
         .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(nCells)
         .select("embedding").collect()
@@ -352,8 +352,8 @@ object Similarity {
           }
         }
       }
-      cents.toSeq.toDF("cell", "cvec")
-    } finally Materialize.release(sampleDf)
+      cents.toSeq
+    }.toDF("cell", "cvec")
   }
 
   /** IVF ANN core: a coarse quantizer frame (cell, cvec) assigns every
@@ -695,13 +695,10 @@ object Similarity {
   def buildSemanticIndex(corpus: DataFrame, centroids: DataFrame,
                          dir: String): Unit = {
     // a REBUILD invalidates any committed-batch markers a streaming gate
-    // left behind (same contract as Dedup.buildDedupIndex): a fresh stream
-    // restarting at batch 0 must append to the new index, not skip on a
-    // stale marker
-    val committed = new org.apache.hadoop.fs.Path(s"$dir/_committed")
-    val fs = committed.getFileSystem(
-      corpus.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(committed)) fs.delete(committed, true)
+    // left behind (same contract as Dedup.buildDedupIndex)
+    val conf = corpus.sparkSession.sparkContext.hadoopConfiguration
+    graft.CommittedBatches.clear(dir, conf)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
     // a rebuild also invalidates any PQ extent: the old codes were encoded
     // from the OLD corpus/centroids, and silently serving them against the
     // new assignment would be the exact staleness this delete exists to

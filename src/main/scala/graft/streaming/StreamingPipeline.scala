@@ -4,7 +4,7 @@ import java.sql.Date
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.{Pipeline, SinkMode, VersionedDir}
+import graft.{CommittedBatches, Pipeline, SinkMode, VersionedDir}
 import graft.operators.{Layout, Materialize}
 
 /** One finalized user session (same shape/epoch-second semantics as the
@@ -32,6 +32,21 @@ final case class OpenSession(startMs: Long, lastMs: Long, n: Long)
   * observably identical per file set.
   */
 object StreamingPipeline {
+
+  /** The one batch lifecycle of every streaming sink: drain everything
+    * pending in `df` (`Trigger.AvailableNow`) through `body`, one call per
+    * micro-batch, then stop. `checkpointDir` carries the consumed-input
+    * state across restarts. Each body runs in its own
+    * [[Materialize.scoped]], so a long-lived stream pins no checkpoint from
+    * one micro-batch to the next.
+    */
+  private def drain(df: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch((batch: DataFrame, batchId: Long) => Materialize.scoped(body(batch, batchId)))
+      .start()
 
   /** File-source stream of report rows, tagged with their source file. */
   def reportStream(spark: SparkSession, inputDir: String,
@@ -79,20 +94,15 @@ object StreamingPipeline {
                       sink: SinkMode = SinkMode.Parquet,
                       horizonDays: Int = 2,
                       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
-    reportStream(spark, inputDir, maxFilesPerTrigger).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val files = batch.select(input_file_name()).distinct()
-          .collect().map(r => Pipeline.decodedPath(r.getString(0))).toSeq
-        Pipeline.ingest(spark, outDir, files, asOf, sink, horizonDays, partial = true) {
-          admitted =>
-            if (admitted.size == files.size) batch
-            else batch.filter(col("nombreArchivo").isin(admitted.map(Pipeline.baseName): _*))
-        }
-        ()
+    drain(reportStream(spark, inputDir, maxFilesPerTrigger), checkpointDir) { (batch, _) =>
+      val files = batch.select(input_file_name()).distinct()
+        .collect().map(r => Pipeline.decodedPath(r.getString(0))).toSeq
+      Pipeline.ingest(spark, outDir, files, asOf, sink, horizonDays, partial = true) {
+        admitted =>
+          if (admitted.size == files.size) batch
+          else batch.filter(col("nombreArchivo").isin(admitted.map(Pipeline.baseName): _*))
       }
-      .start()
+    }
 
   /** Post-drain reconciliation: the pending (listed, not yet ledgered) files
     * the stream itself cannot deliver, run through the same per-file ladder
@@ -294,8 +304,8 @@ object StreamingPipeline {
     * same discipline as the batch curation pipeline).
     *
     * Restart-safe for real (round-8 advice): foreachBatch is at-least-once,
-    * so the whole per-batch body ([[dedupGateBatch]]) is idempotent — see
-    * its scaladoc for the replay protocol. Output lands under
+    * so the whole per-batch body ([[dedupGateBatch]]) is idempotent under
+    * the [[graft.CommittedBatches]] replay protocol. Output lands under
     * `outDir/batch=<id>/` (partition-discovered as a `batch` column;
     * `spark.read.parquet(outDir)` still reads the union).
     *
@@ -306,35 +316,18 @@ object StreamingPipeline {
                       checkpointDir: String, idCol: String = "doc_id",
                       textCol: String = "text",
                       threshold: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupGateBatch(batch, batchId, indexDir, outDir, idCol, textCol, threshold)
-      }
-      .start()
+    drain(docs, checkpointDir)(
+      dedupGateBatch(_, _, indexDir, outDir, idCol, textCol, threshold))
 
-  /** One idempotent micro-batch of the dedup gate. Replay protocol, in
-    * order, so an at-least-once replay of batch N re-emits rather than
-    * re-filters (no silent loss at any crash point):
-    *
-    *  1. Gate against the index EXCLUDING this batch's own ids — a crashed
-    *     attempt may already have appended them, and self-filtering on
-    *     replay is exactly the silent-loss bug; exclusion makes the
-    *     recomputed survivor set identical on every attempt.
-    *  2. Write survivors to the batch-scoped `outDir/batch=<id>` with
-    *     OVERWRITE — replays rewrite the same rows instead of appending
-    *     duplicates.
-    *  3. Append survivors to the index, guarded by a committed-batch marker
-    *     (`indexDir/_committed/batch-<id>`): a replay that finds the marker
-    *     skips the append. A crash between append and marker can leave
-    *     duplicate index rows for this batch — harmless by construction
-    *     (every index lookup is distinct/semi-join based), and the gate
-    *     result is still exact because of the step-1 exclusion.
+  /** One idempotent micro-batch of the dedup gate, under the
+    * [[graft.CommittedBatches]] replay protocol: (1) gate excluding this
+    * batch's own ids, (2) overwrite the batch-scoped output partition,
+    * (3) append the survivors to the index behind the committed-batch
+    * marker. Every checkpoint the batch takes is released on the way out.
     */
   def dedupGateBatch(batch: DataFrame, batchId: Long, indexDir: String, outDir: String,
                      idCol: String = "doc_id", textCol: String = "text",
-                     threshold: Double = 0.5): Unit = {
+                     threshold: Double = 0.5): Unit = Materialize.scoped {
     import graft.operators.Dedup
     val exactKeepers = Dedup.exactByFingerprint(batch, textCol, idCol).select(idCol)
     val selfExact = batch.join(exactKeepers, Seq(idCol), "left_semi")
@@ -347,15 +340,8 @@ object StreamingPipeline {
       indexDir, selfDeduped, idCol, textCol, threshold = threshold,
       excludeIds = Some(selfDeduped.select(idCol))))
     survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_committed/batch-$batchId")
-    val fs = marker.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      Dedup.appendToDedupIndex(survivors, idCol, textCol, indexDir)
-      fs.mkdirs(marker)
-    }
-    // release the per-batch snapshot: a long-lived stream otherwise pins
-    // one checkpointed RDD per micro-batch
-    Materialize.release(survivors)
+    CommittedBatches.once(indexDir, batchId, batch.sparkSession.sparkContext.hadoopConfiguration)(
+      Dedup.appendToDedupIndex(survivors, idCol, textCol, indexDir))
   }
 
   /** Streaming SEMANTIC dedup gate — [[dedupGateStream]]'s embedding twin
@@ -371,26 +357,17 @@ object StreamingPipeline {
   def semanticGateStream(vectors: DataFrame, indexDir: String, outDir: String,
                          checkpointDir: String,
                          threshold: Double = 0.9): StreamingQuery =
-    vectors.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semanticGateBatch(batch, batchId, indexDir, outDir, threshold)
-      }
-      .start()
+    drain(vectors, checkpointDir)(semanticGateBatch(_, _, indexDir, outDir, threshold))
 
-  /** One idempotent micro-batch of the semantic gate — [[dedupGateBatch]]'s
-    * replay protocol verbatim: (1) gate excluding this batch's own ids
-    * (a crashed attempt may already have appended them; without exclusion
-    * the replay's own index rows veto every vector via cosine-1.0
-    * self-pairs), (2) overwrite the batch-scoped output partition,
-    * (3) append admitted rows to the index behind a committed-batch
-    * marker. Intra-batch keep-smallest needs no separate pass — the
+  /** One idempotent micro-batch of the semantic gate, under the
+    * [[graft.CommittedBatches]] replay protocol (without step 1's exclusion
+    * the replay's own index rows would veto every vector via cosine-1.0
+    * self-pairs). Intra-batch keep-smallest needs no separate pass — the
     * admission core already drops a vector with a smaller-id ≥threshold
     * neighbor in its own batch.
     */
   def semanticGateBatch(batch: DataFrame, batchId: Long, indexDir: String,
-                        outDir: String, threshold: Double = 0.9): Unit = {
+                        outDir: String, threshold: Double = 0.9): Unit = Materialize.scoped {
     import graft.operators.Similarity
     val vecs = batch.select(col("vec_id"), col("embedding"))
     // full index layout back from the gate: the append below reuses this
@@ -400,13 +377,8 @@ object StreamingPipeline {
       indexDir, vecs, threshold, excludeIds = Some(vecs.select("vec_id"))))
     admitted.select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_committed/batch-$batchId")
-    val fs = marker.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      Similarity.appendAssignedToSemanticIndex(admitted, indexDir)
-      fs.mkdirs(marker)
-    }
-    Materialize.release(admitted) // the per-batch snapshot
+    CommittedBatches.once(indexDir, batchId, batch.sparkSession.sparkContext.hadoopConfiguration)(
+      Similarity.appendAssignedToSemanticIndex(admitted, indexDir))
   }
 
   /** Streaming MEDIA near-dup gate — [[dedupGateStream]]'s multimodal twin,
@@ -428,19 +400,12 @@ object StreamingPipeline {
   def mediaGateStream(media: DataFrame, indexDir: String, outDir: String,
                       checkpointDir: String, maxDist: Int = 3,
                       quarantineDir: Option[String] = None): StreamingQuery =
-    media.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mediaGateBatch(batch, batchId, indexDir, outDir, maxDist, quarantineDir)
-      }
-      .start()
+    drain(media, checkpointDir)(
+      mediaGateBatch(_, _, indexDir, outDir, maxDist, quarantineDir))
 
-  /** One idempotent micro-batch of the media gate — [[dedupGateBatch]]'s
-    * replay protocol verbatim: (1) gate excluding this batch's own ids
-    * from the index side (a crashed attempt may already have appended
-    * them), (2) overwrite the batch-scoped output partition, (3) append
-    * admitted signatures behind a committed-batch marker.
+  /** One idempotent micro-batch of the media gate, under the
+    * [[graft.CommittedBatches]] replay protocol; step 3 appends the
+    * admitted signatures.
     *
     * `quarantineDir` (optional) receives the rows that yielded NO signature
     * (null/undecodable/undersized payloads) under `batch=<id>` — they are
@@ -451,7 +416,7 @@ object StreamingPipeline {
     */
   def mediaGateBatch(batch: DataFrame, batchId: Long, indexDir: String,
                      outDir: String, maxDist: Int = 3,
-                     quarantineDir: Option[String] = None): Unit = {
+                     quarantineDir: Option[String] = None): Unit = Materialize.scoped {
     import graft.operators.{Dedup, Multimodal}
     // one decode per payload; both the self-join and the cross-join read it
     val sigs = Materialize.frame(Multimodal.dHashSigs(batch))
@@ -470,21 +435,13 @@ object StreamingPipeline {
       batch.join(sigs.select("media_id"), Seq("media_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$qd/batch=$batchId")
     }
-    // admitted is eagerly checkpointed — sigs' blocks are no longer needed
-    // (a streaming loop would otherwise pin them per batch)
-    Materialize.release(sigs)
     batch.join(admitted.select("media_id"), Seq("media_id"), "left_semi")
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_committed/batch-$batchId")
-    val fs = marker.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      // batch-scoped overwrite append: a replay re-running this step (crash
-      // between append and marker) rewrites sigs/b<id> instead of
-      // accumulating duplicate signature rows per crash loop
-      Multimodal.appendToMediaIndex(admitted, indexDir, batchId)
-      fs.mkdirs(marker)
-    }
-    Materialize.release(admitted) // both sinks written; nothing reads it again
+    // batch-scoped overwrite append: a replay re-running this step (crash
+    // between append and marker) rewrites sigs/b<id> instead of
+    // accumulating duplicate signature rows per crash loop
+    CommittedBatches.once(indexDir, batchId, batch.sparkSession.sparkContext.hadoopConfiguration)(
+      Multimodal.appendToMediaIndex(admitted, indexDir, batchId))
   }
 
   /** Streaming DECONTAMINATION monitor — the eval-suite-overlap member of
@@ -504,14 +461,9 @@ object StreamingPipeline {
   def contaminationGateStream(docs: DataFrame, indexDir: String,
                               checkpointDir: String, idCol: String = "doc_id",
                               textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.contaminationGateBatch(indexDir, batch, idCol, textCol)
-        ()
-      }
-      .start()
+    drain(docs, checkpointDir) { (batch, _) =>
+      graft.operators.Dedup.contaminationGateBatch(indexDir, batch, idCol, textCol)
+    }
 
   /** Streaming quality/language CLASSIFIER gate — the third member of the
     * gate family (exact-dedup, semantic, classifier): each micro-batch of
@@ -534,14 +486,8 @@ object StreamingPipeline {
     // query while every batch dies in the background)
     require(keepLabels.nonEmpty, "keepLabels must not be empty")
     requireNoReservedCols(docs, labelCol)
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        classifierGateBatch(batch, batchId, modelDir, outDir, keepLabels,
-          idCol, textCol, labelCol)
-      }
-      .start()
+    drain(docs, checkpointDir)(
+      classifierGateBatch(_, _, modelDir, outDir, keepLabels, idCol, textCol, labelCol))
   }
 
   /** Streaming BPE token annotator over a PERSISTED merge table
@@ -566,20 +512,16 @@ object StreamingPipeline {
     require(!docs.columns.contains("n_bpe_tokens"),
       "input must not contain reserved column n_bpe_tokens")
     val merges = Bpe.loadMerges(docs.sparkSession, mergesDir)
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the rank-priority applier, not the replace chain: a persisted
-        // PRODUCTION merge table (32k merges) would otherwise compile to a
-        // 32k-deep expression per batch (BpeSpec pins the two identical)
-        batch.join(
-            Bpe.tokenCountsScalable(batch, idCol, textCol, merges), Seq(idCol), "left")
-          .withColumn("n_bpe_tokens", coalesce(col("n_bpe_tokens"), lit(0L)))
-          .filter(col("n_bpe_tokens") <= maxTokens)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    drain(docs, checkpointDir) { (batch, batchId) =>
+      // the rank-priority applier, not the replace chain: a persisted
+      // PRODUCTION merge table (32k merges) would otherwise compile to a
+      // 32k-deep expression per batch (BpeSpec pins the two identical)
+      batch.join(
+          Bpe.tokenCountsScalable(batch, idCol, textCol, merges), Seq(idCol), "left")
+        .withColumn("n_bpe_tokens", coalesce(col("n_bpe_tokens"), lit(0L)))
+        .filter(col("n_bpe_tokens") <= maxTokens)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }
   }
 
   /** The gate's output attaches `pred_<labelCol>` and `score` next to the
@@ -630,13 +572,8 @@ object StreamingPipeline {
   def cdcApplyStream(changes: DataFrame, stateDir: String, checkpointDir: String,
                      key: String, attrs: Seq[String], opCol: String = "op",
                      tsCol: String = "ts", tieCol: String = "seq"): StreamingQuery =
-    changes.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cdcApplyBatch(batch, batchId, stateDir, key, attrs, opCol, tsCol, tieCol)
-      }
-      .start()
+    drain(changes, checkpointDir)(
+      cdcApplyBatch(_, _, stateDir, key, attrs, opCol, tsCol, tieCol))
 
   /** Continuous SCD-2 materialization: drain an attribute-update stream into
     * an on-disk open/closed dimension layout via
@@ -646,8 +583,9 @@ object StreamingPipeline {
     * Type-2 apply, since a Type-2 batch closes at most one interval per key.
     *
     * Replay protocol (foreachBatch is at-least-once): a completed batch
-    * leaves an underscore-prefixed marker (invisible to parquet file
-    * listings) and replays skip on it. A crash INSIDE the batch either
+    * leaves its committed-batch marker under `closedDir`
+    * ([[graft.CommittedBatches]]) and replays skip on it. A crash INSIDE
+    * the batch either
     * happened before the open slice's overwrite — the replay recomputes the
     * identical delta and re-appends the same closed rows (the d8
     * append-then-marker trade: closed-extent duplicates are STORED, never
@@ -658,8 +596,8 @@ object StreamingPipeline {
     * the cold extent appends BEFORE the open slice swaps.
     *
     * The state dirs are tied to ONE checkpoint lineage: resetting the
-    * checkpoint restarts batchIds at 0, where surviving `_applied-0..2`
-    * markers would silently skip the first batches (and replaying already-
+    * checkpoint restarts batchIds at 0, where the surviving markers of the
+    * last three batches would silently skip the first batches (and replaying already-
     * applied data into live state double-closes intervals anyway). A new
     * checkpoint means new open/closed dirs — same rule as every versioned
     * sink in this engine.
@@ -667,13 +605,8 @@ object StreamingPipeline {
   def scdApplyStream(updates: DataFrame, openDir: String, closedDir: String,
                      checkpointDir: String, key: String, attrs: Seq[String],
                      effCol: String, tieCol: String): StreamingQuery =
-    updates.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scdApplyBatch(batch, batchId, openDir, closedDir, key, attrs, effCol, tieCol)
-      }
-      .start()
+    drain(updates, checkpointDir)(
+      scdApplyBatch(_, _, openDir, closedDir, key, attrs, effCol, tieCol))
 
   /** One replay-guarded SCD-2 micro-batch (see [[scdApplyStream]]). */
   def scdApplyBatch(batch: DataFrame, batchId: Long, openDir: String,
@@ -681,31 +614,16 @@ object StreamingPipeline {
                     effCol: String, tieCol: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
-    val cdir = new org.apache.hadoop.fs.Path(closedDir)
-    val fs = cdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(closedDir, s"_applied-$batchId")
-    if (fs.exists(marker)) return // replay of a COMPLETED batch: skip whole
-    // latest row per key: window over the (unbounded-cardinality) business
-    // key — the same per-key discipline as the CDC heap collapse
-    val latest = batch
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col(key)).orderBy(col(effCol).desc, col(tieCol).desc)))
-      .filter(col("_rn") === 1).drop("_rn")
-    graft.operators.Scd.applyBatchDeltaDirs(
-      spark, openDir, closedDir, latest, key, attrs, effCol)
-    fs.create(marker, true).close()
-    // GC old markers: replays only ever arrive for recent batches (the
-    // checkpoint advances), so markers older than batchId-2 are dead weight
-    // a long-running stream would otherwise accrete one file per batch.
-    // toLongOption: a stray non-numeric-suffixed file (partial create,
-    // foreign tool artifact) is skipped, not a NumberFormatException that
-    // would fail the whole micro-batch AFTER its data already wrote.
-    fs.listStatus(cdir).map(_.getPath.getName)
-      .collect { case n if n.startsWith("_applied-") => n.stripPrefix("_applied-") }
-      .flatMap(_.toLongOption)
-      .filter(_ < batchId - 2)
-      .foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(closedDir, s"_applied-$v"), false))
+    CommittedBatches.once(closedDir, batchId, spark.sparkContext.hadoopConfiguration) {
+      // latest row per key: window over the (unbounded-cardinality) business
+      // key — the same per-key discipline as the CDC heap collapse
+      val latest = batch
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(col(key)).orderBy(col(effCol).desc, col(tieCol).desc)))
+        .filter(col("_rn") === 1).drop("_rn")
+      graft.operators.Scd.applyBatchDeltaDirs(
+        spark, openDir, closedDir, latest, key, attrs, effCol)
+    }
   }
 
   /** The versioned state of a streaming sink: `v=<batchId>` dirs. */
@@ -758,13 +676,7 @@ object StreamingPipeline {
   def countMinStream(items: DataFrame, stateDir: String, checkpointDir: String,
                      itemCol: String = "item", depth: Int = 4,
                      width: Int = 512): StreamingQuery =
-    items.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        countMinBatch(batch, batchId, stateDir, itemCol, depth, width)
-      }
-      .start()
+    drain(items, checkpointDir)(countMinBatch(_, _, stateDir, itemCol, depth, width))
 
   def countMinBatch(batch: DataFrame, batchId: Long, stateDir: String,
                     itemCol: String, depth: Int, width: Int): Unit =
@@ -790,13 +702,8 @@ object StreamingPipeline {
   def preferenceFoldStream(scored: DataFrame, stateDir: String,
                            checkpointDir: String, promptCol: String,
                            idCol: String, qFpCol: String): StreamingQuery =
-    scored.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        preferenceFoldBatch(batch, batchId, stateDir, promptCol, idCol, qFpCol)
-      }
-      .start()
+    drain(scored, checkpointDir)(
+      preferenceFoldBatch(_, _, stateDir, promptCol, idCol, qFpCol))
 
   /** One replayable preference-fold micro-batch (see
     * [[preferenceFoldStream]]).

@@ -126,21 +126,59 @@ class InvariantsSpec extends SparkSpec {
         "update the total when adding/re-minting pins")
   }
 
-  test("checkpoints are taken and released only through Materialize") {
-    // a direct checkpoint call bypasses spark.graft.materialize.mode and
-    // the release contract, so only Materialize.scala may hold one
+  /** Every Scala file under `src/main`: (file name, text). */
+  private def mainSources(): Seq[(String, String)] = {
     val root = java.nio.file.Paths.get("src/main")
     assume(java.nio.file.Files.isDirectory(root), "src/main not present (non-repo checkout)")
     val walk = java.nio.file.Files.walk(root)
     val files = try walk.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq finally walk.close()
+    files.filter(_.toString.endsWith(".scala")).map(p =>
+      p.getFileName.toString -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+  }
+
+  /** `text` without its `/* */` and `//` comments. */
+  private def code(text: String): String =
+    text.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+
+  test("checkpoints are taken and released only through Materialize") {
+    // a direct checkpoint call bypasses spark.graft.materialize.mode and
+    // the release contract, so only Materialize.scala may hold one
     val calls = Seq(".localCheckpoint(", ".checkpoint(", "Checkpoints.")
-    val offenders = files
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Materialize.scala")
-      .flatMap { p =>
-        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        calls.filter(text.contains).map(c => s"$p: $c")
-      }
+    val offenders = mainSources()
+      .filter(_._1 != "Materialize.scala")
+      .flatMap { case (f, text) => calls.filter(text.contains).map(c => s"$f: $c") }
     assert(offenders.isEmpty, s"checkpoint calls outside Materialize: ${offenders.mkString("; ")}")
+  }
+
+  test("checkpoints are released by scope, explicitly only in Bpe and Centrality") {
+    // a hand-placed release cannot reach an operator's internal checkpoint;
+    // Materialize.scoped does. Explicit release is left for a loop freeing
+    // superseded rounds and a function returning its own checkpoint.
+    val offenders = mainSources()
+      .filter { case (_, text) => code(text).contains("Materialize.release") }
+      .map(_._1).toSet -- Set("Bpe.scala", "Centrality.scala")
+    assert(offenders.isEmpty, s"explicit Materialize.release in: ${offenders.mkString(", ")}")
+  }
+
+  test("every streaming sink starts through the one drain") {
+    // (file, whether the call sits in the body of a `def drain`)
+    val sites = mainSources().flatMap { case (f, text) =>
+      val c = code(text)
+      """\.foreachBatch\b""".r.findAllMatchIn(c).map { m =>
+        val drain = c.lastIndexOf("def drain(", m.start)
+        f -> (drain >= 0 && c.indexOf("def ", drain + 1) > m.start)
+      }
+    }
+    assert(sites == Seq("StreamingPipeline.scala" -> true), s"foreachBatch calls: $sites")
+  }
+
+  test("committed-batch marker paths are built only by CommittedBatches") {
+    val outside = mainSources().map { case (f, text) =>
+      val c = code(text)
+      f -> (if (f == "VersionedDir.scala") c.take(c.indexOf("object CommittedBatches")) else c)
+    }.collect { case (f, c) if c.contains("_committed") => f }
+    assert(outside.isEmpty,
+      s"_committed paths built outside CommittedBatches in: ${outside.mkString(", ")}")
   }
 
   test("registry hygiene: intra-registry duplicate keys fail at construction") {

@@ -267,6 +267,36 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
       Date.valueOf("2024-02-16")) == Pipeline.RunSummary(0, 0, 0))
   }
 
+  test("a batch with a header-only file appends the ledger once") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val (in2, out2) = freshRun("report_a.txt" -> reportA, "report_h.txt" -> Seq(header))
+    val ledgerWrites = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    // listener events arrive in order: once the marker query's is seen,
+    // every write of the batch has been counted
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        if (qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand =>
+              c.outputPath.getName == "bitacora" }.contains(true))
+          ledgerWrites.incrementAndGet()
+        if (qe.analyzed.output.map(_.name) == Seq("ledger_flush")) flushed.countDown()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val s = Pipeline.runBatch(spark, in2.toString, out2.toString, Date.valueOf("2024-02-15"))
+      spark.range(1).toDF("ledger_flush").collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never flushed")
+      assert(s == Pipeline.RunSummary(2, 3, 2))
+    } finally spark.listenerManager.unregister(listener)
+    assert(ledgerWrites.get == 1, s"${ledgerWrites.get} bitacora appends")
+    assert(ledger(out2) == Seq(("report_a.txt", 3L, 2L, "Completado con errores"),
+      ("report_h.txt", 0L, 0L, "Completado")))
+  }
+
   test("a report named with URL-escaped characters is ledgered once, under its own name") {
     // input_file_name() percent-encodes the path: `%20` for the space, `%25`
     // for the `%`; a literal `+` stays and must not decode to a space
@@ -487,6 +517,44 @@ class JdbcUpsertSpec extends SparkSpec with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       Pipeline.createKeyedTableDdl("jdbc:derby:/x", "v", schema, "nope")
     }
+  }
+
+  test("an upsert batch updates only the rows of the keys it touched") {
+    val row = Map(
+      "alice" -> "alice@example.com,x,-,-,01/02/2024 10:00,,1,0,,0,0,-,-,-,-",
+      "bob" -> "bob@example.com,y,-,-,02/02/2024 10:00,,1,0,,0,0,-,-,-,-",
+      "carol" -> "carol@example.com,z,-,-,03/02/2024 10:00,,1,0,,0,0,-,-,-,-",
+      "bob2" -> "bob@example.com,y,-,-,12/03/2024 09:00,,1,0,,0,0,-,-,-,-")
+    val in = Files.createTempDirectory("graft_ups_keys_in")
+    val out = Files.createTempDirectory("graft_ups_keys_out")
+    val m = SinkMode.Jdbc(s"jdbc:derby:${out.resolve("db")};create=true",
+      replace = JdbcReplace.Upsert)
+    // the parquet sink writes the whole merge: the expected table
+    val pq = Files.createTempDirectory("graft_ups_keys_pq")
+    def batch(file: String, rows: String*)(asOf: String): Unit = {
+      Files.write(in.resolve(file), (header +: rows).mkString("\n").getBytes)
+      for ((sink, to) <- Seq(m -> out, SinkMode.Parquet -> pq))
+        Pipeline.runBatch(spark, in.toString, to.toString, Date.valueOf(asOf), sink = sink)
+    }
+    batch("report_a.txt", row("alice"), row("bob"), row("carol"))("2024-02-15")
+    // the witness: one row per visitantes row the database updates
+    def exec(sql: String): Unit = {
+      val conn = java.sql.DriverManager.getConnection(m.url)
+      try conn.createStatement().execute(sql) finally conn.close()
+    }
+    exec("CREATE TABLE upd_witness (email VARCHAR(255))")
+    exec("CREATE TRIGGER vis_upd AFTER UPDATE ON visitantes REFERENCING NEW AS n " +
+      "FOR EACH ROW INSERT INTO upd_witness VALUES (n.\"email\")")
+    batch("report_b.txt", row("bob2"))("2024-03-20")
+    val updated = spark.read.jdbc(m.url, "upd_witness", new java.util.Properties)
+      .collect().map(_.getString(0)).toSeq
+    assert(updated == Seq("bob@example.com"), s"updated rows: $updated")
+
+    def table(df: org.apache.spark.sql.DataFrame) = df
+      .select(operators.Merge.allCols.map(col): _*).orderBy("email").collect().map(_.toSeq).toSeq
+    val expected = table(Pipeline.currentVisitantes(spark, pq.toString).get)
+    assert(expected.size == 3)
+    assert(table(Pipeline.currentVisitantes(spark, out.toString, m).get) == expected)
   }
 
   test("upsert run 1 creates the table; run 2 updates + inserts in place, no staging leftovers") {

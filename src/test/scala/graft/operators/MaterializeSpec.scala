@@ -2,12 +2,15 @@ package graft.operators
 
 import java.nio.file.{Files, Path}
 import java.sql.Date
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import graft.{Pipeline, SparkSpec}
 
 /** The r22 pluggable materialization strategy: `local` (default,
   * localCheckpoint) vs `reliable` (Dataset.checkpoint to the checkpoint
   * dir). Results must be identical; reliable mode must fail loudly without
   * a checkpoint dir, and a released reliable frame leaves no files behind.
+  * `scoped` releases what its body takes.
   */
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
@@ -99,5 +102,61 @@ class MaterializeSpec extends SparkSpec {
     val vis = Pipeline.currentVisitantes(spark, outDir.toString).get
       .select("email", "visitasTotales").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(vis == Map("alice@example.com" -> 2, "bob@example.com" -> 1))
+  }
+
+  /** Whether the checkpoint blocks behind `df` are still persisted. */
+  private def held(df: DataFrame): Boolean = {
+    val ids = df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
+    assert(ids.nonEmpty, "not a checkpointed frame")
+    ids.forall(spark.sparkContext.getPersistentRDDs.contains)
+  }
+
+  test("scoped releases every frame and round taken in it when the body returns") {
+    var (f, r): (DataFrame, DataFrame) = (null, null)
+    val n = Materialize.scoped {
+      f = Materialize.frame(docs)
+      r = Materialize.round(docs)
+      assert(held(f) && held(r))
+      f.count() + r.count()
+    }
+    assert(n == 8)
+    assert(!held(f) && !held(r))
+  }
+
+  test("scoped releases its checkpoints when the body throws") {
+    var f: DataFrame = null
+    val e = intercept[IllegalStateException] {
+      Materialize.scoped {
+        f = Materialize.frame(docs)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(!held(f))
+  }
+
+  test("a nested scope releases only its own checkpoints; frames taken outside any scope stay") {
+    val outside = Materialize.frame(docs)
+    var (outer, inner): (DataFrame, DataFrame) = (null, null)
+    Materialize.scoped {
+      outer = Materialize.frame(docs)
+      Materialize.scoped { inner = Materialize.frame(docs) }
+      assert(!held(inner) && held(outer))
+    }
+    assert(!held(outer))
+    assert(held(outside))
+    Materialize.release(outside)
+  }
+
+  test("scoped refuses a Dataset result and still releases its checkpoints") {
+    var f: DataFrame = null
+    val e = intercept[IllegalArgumentException] {
+      Materialize.scoped {
+        f = Materialize.frame(docs)
+        f.select("doc_id")
+      }
+    }
+    assert(e.getMessage.contains("Dataset"), e.getMessage)
+    assert(!held(f))
   }
 }

@@ -310,7 +310,7 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
       }
       in.toString
     }
-    def drain(maxFiles: Option[Int]): (Set[Long], Long, Int) = {
+    def drain(maxFiles: Option[Int]): (Set[Long], Long, Int, Set[String]) = {
       val idx = Files.createTempDirectory("bb_idx").toString
       val out = Files.createTempDirectory("bb_out").toString
       val ck = Files.createTempDirectory("bb_ck").toString
@@ -324,10 +324,11 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
       val indexRows = spark.read.parquet(s"$idx/fps").count()
       val nBatches = new java.io.File(out).listFiles()
         .count(f => f.isDirectory && f.getName.startsWith("batch="))
-      (admitted, indexRows, nBatches)
+      val markers = new java.io.File(s"$idx/_committed").list().toSet
+      (admitted, indexRows, nBatches, markers)
     }
-    val (bounded, boundedIdx, boundedBatches) = drain(Some(1))
-    val (oneShot, oneShotIdx, oneShotBatches) = drain(None)
+    val (bounded, boundedIdx, boundedBatches, boundedMarkers) = drain(Some(1))
+    val (oneShot, oneShotIdx, oneShotBatches, oneShotMarkers) = drain(None)
     assert(boundedBatches == fileDocs.size,
       s"expected one micro-batch per file, got $boundedBatches")
     assert(oneShotBatches == 1, s"unbounded drain split into $oneShotBatches batches")
@@ -336,6 +337,9 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(oneShot == expected, s"one-shot drain admitted $oneShot")
     assert(boundedIdx == oneShotIdx,
       s"index diverged: bounded $boundedIdx rows vs one-shot $oneShotIdx")
+    // a long drain keeps the committed-batch markers of its last three batches
+    assert(boundedMarkers == Set("batch-3", "batch-4", "batch-5"), boundedMarkers)
+    assert(oneShotMarkers == Set("batch-0"), oneShotMarkers)
   }
 
   test("dedup gate replay re-emits survivors instead of re-filtering (at-least-once safety)") {
@@ -543,11 +547,7 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     import graft.operators.Multimodal
     import spark.implicits._
     // the CentralitySpec/BpeSpec leak bound applied to the streaming loop:
-    // a long-lived stream must not accumulate pinned RDDs per batch. Only
-    // the media gate is held to an empty set — its two checkpoints (sigs,
-    // admitted) are both released; the text/semantic gates' INTERNALS take
-    // Materialize.frame checkpoints that nothing releases (only the
-    // ContextCleaner reclaims them, after a GC), so they would fail it.
+    // a long-lived stream must not accumulate pinned RDDs per batch
     val mIdx = Files.createTempDirectory("leak_m_idx").toString
     val mOut = Files.createTempDirectory("leak_m_out").toString
     Multimodal.buildMediaIndex(
@@ -562,6 +562,71 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
       }
     }
     assert(left.isEmpty, s"media gate leaked ${left.size} snapshots across 4 micro-batches")
+  }
+
+  test("a dedup gate batch releases every checkpoint, its operators' internal ones included") {
+    import graft.operators.Dedup
+    import spark.implicits._
+    val idx = Files.createTempDirectory("leak_d_idx").toString
+    val out = Files.createTempDirectory("leak_d_out").toString
+    Dedup.buildDedupIndex(
+      Seq((1L, "the quick brown fox jumps over the lazy dog and runs away fast"))
+        .toDF("doc_id", "text"), "doc_id", "text", idx)
+    val docs = Seq((10L, "completely different content about spark distributed engines here"),
+      (11L, "the quick brown fox jumps over the lazy dog and walks away fast"))
+      .toDF("doc_id", "text")
+    val left = leakedRdds(StreamingPipeline.dedupGateBatch(docs, 0L, idx, out))
+    assert(left.isEmpty, s"dedup gate batch left ${left.size} persisted RDDs")
+  }
+
+  test("a semantic gate batch releases every checkpoint, its operators' internal ones included") {
+    import graft.operators.Similarity
+    import spark.implicits._
+    val idx = Files.createTempDirectory("leak_s_idx").toString
+    val out = Files.createTempDirectory("leak_s_out").toString
+    Similarity.buildSemanticIndex(Seq((1L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding"),
+      Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f))).toDF("cell", "cvec"), idx)
+    val vecs = Seq((10L, Array(0.99f, 0.1f)), (11L, Array(0.1f, 0.99f)))
+      .toDF("vec_id", "embedding")
+    val left = leakedRdds(StreamingPipeline.semanticGateBatch(vecs, 0L, idx, out))
+    assert(left.isEmpty, s"semantic gate batch left ${left.size} persisted RDDs")
+  }
+
+  test("a contamination gate batch releases its checkpoint") {
+    import graft.operators.Dedup
+    import spark.implicits._
+    val idx = Files.createTempDirectory("leak_c_idx").toString
+    Dedup.buildContaminationIndex(Seq((10L, "a b c d q r")).toDF("doc_id", "text"),
+      "doc_id", "text", idx)
+    val docs = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
+    var matched = 0L
+    val left = leakedRdds {
+      matched = Dedup.contaminationGateBatch(idx, docs, "doc_id", "text")
+    }
+    assert(matched > 0)
+    assert(left.isEmpty, s"contamination gate batch left ${left.size} persisted RDDs")
+  }
+
+  test("a gate batch whose index append throws still releases its checkpoints") {
+    import graft.operators.Multimodal
+    import spark.implicits._
+    def payloads(ids: Long*) = Multimodal.syntheticGridImages(ids.toDF("media_id"), "media_id")
+      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]]("payload"))).toSeq
+      .toDF("media_id", "payload")
+    val idx = Files.createTempDirectory("leak_t_idx").toString
+    val out = Files.createTempDirectory("leak_t_out").toString
+    Multimodal.buildMediaIndex(Multimodal.syntheticGridImages(
+      Seq(0L).toDF("media_id"), "media_id"), idx)
+    StreamingPipeline.mediaGateBatch(payloads(8L), 1L, idx, out)
+    val rewind = payloads(16L)
+    // batch 0 after batch 1: the index refuses the rewind inside the
+    // guarded append, after both gate checkpoints were taken
+    val left = leakedRdds {
+      val e = intercept[IllegalArgumentException](
+        StreamingPipeline.mediaGateBatch(rewind, 0L, idx, out))
+      assert(e.getMessage.contains("below the max existing"), e.getMessage)
+    }
+    assert(left.isEmpty, s"the failed gate batch left ${left.size} persisted RDDs")
   }
 
   test("streaming media gate end-to-end: MemoryStream payloads drain through the shared index") {
@@ -971,6 +1036,20 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
     assert(open().map(r => (r._1, r._2)) == Seq((1L, "gold"), (2L, "gold"), (3L, "bronze")))
   }
 
+  test("streaming SCD-2 keeps the committed-batch markers of its last three batches") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("scd_markers").toString
+    val (openDir, closedDir) = (s"$root/open", s"$root/closed")
+    for (b <- 0L to 4L)
+      StreamingPipeline.scdApplyBatch(
+        Seq((1L, s"tier$b", Timestamp.valueOf(s"2024-01-0${b + 1} 09:00:00"), b))
+          .toDF("k", "tier", "eff", "seq"),
+        b, openDir, closedDir, "k", Seq("tier"), "eff", "seq")
+    val markers = Option(new java.io.File(s"$closedDir/_committed").list()).map(_.toSet)
+    assert(markers.contains(Set("batch-2", "batch-3", "batch-4")), markers)
+    assert(spark.read.parquet(closedDir).count() == 4) // tier0..tier3 closed
+  }
+
   test("stray non-numeric files in state dirs are skipped, not batch-killers") {
     import spark.implicits._
     // round-11 advice: marker GC and version listing used bare .toLong —
@@ -983,14 +1062,14 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterAll {
       Seq((1L, "bronze", Timestamp.valueOf("2024-01-01 09:00:00"), 1L))
         .toDF("k", "tier", "eff", "seq"),
       0L, openDir, closedDir, "k", Seq("tier"), "eff", "seq")
-    Files.createFile(java.nio.file.Paths.get(closedDir, "_applied-garbage"))
+    Files.createFile(java.nio.file.Paths.get(closedDir, "_committed", "batch-garbage"))
     // a later batch triggers the marker GC sweep over closedDir
     for (b <- 1L to 3L)
       StreamingPipeline.scdApplyBatch(
         Seq((1L, s"tier$b", Timestamp.valueOf(s"2024-01-0${b + 1} 09:00:00"), b + 1L))
           .toDF("k", "tier", "eff", "seq"),
         b, openDir, closedDir, "k", Seq("tier"), "eff", "seq")
-    assert(Files.exists(java.nio.file.Paths.get(closedDir, "_applied-garbage")))
+    assert(Files.exists(java.nio.file.Paths.get(closedDir, "_committed", "batch-garbage")))
 
     val cdcDir = Files.createTempDirectory("cdc_stray").toString
     StreamingPipeline.cdcApplyBatch(
